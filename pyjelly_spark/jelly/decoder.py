@@ -20,7 +20,7 @@ from __future__ import annotations
 from typing import Dict, Iterable, Iterator, List, Optional, Tuple
 
 from pyjelly_spark.jelly import constants as c
-from pyjelly_spark.jelly.wire import iter_fields, read_uvarint
+from pyjelly_spark.jelly.wire import field_bytes, iter_fields, read_uvarint
 
 Term = tuple
 
@@ -38,15 +38,26 @@ class DecodeTable:
         self.last_set = 0
         self.last_used = 0
 
+    def out_of_range(self, index: int) -> c.JellyError:
+        return c.JellyError(
+            f"lookup index {index} is outside the table's capacity {self.capacity}"
+        )
+
     def put(self, index: int, value: str) -> None:
         if index == 0:
             index = self.last_set + 1
-        self._values[index - 1] = value
+        try:
+            self._values[index - 1] = value
+        except IndexError:
+            raise self.out_of_range(index) from None
         self.last_set = index
 
     def fetch(self, index: int) -> str:
         self.last_used = index
-        value = self._values[index - 1]
+        try:
+            value = self._values[index - 1]
+        except IndexError:
+            raise self.out_of_range(index) from None
         if value is None:
             raise c.JellyError(f"lookup index {index} was never assigned")
         return value
@@ -72,8 +83,8 @@ class DecodeTable:
 def parse_options_row(body: bytes, delimited: bool) -> c.StreamOptions:
     """Materialize a StreamOptions from an RdfStreamOptions message body."""
     values: Dict[int, object] = {}
-    for field, _wt, value in iter_fields(body):
-        values[field] = value
+    for field, wt, value in iter_fields(body):
+        values[field] = field_bytes(wt, value) if field == c.OPT_STREAM_NAME else value
     version = int(values.get(c.OPT_VERSION, 0))
     if version > c.PROTO_VERSION_WITH_NAMESPACES:
         # Jelly spec: a consumer MUST reject a stream declaring a
@@ -90,7 +101,7 @@ def parse_options_row(body: bytes, delimited: bool) -> c.StreamOptions:
             prefixes=int(values.get(c.OPT_MAX_PREFIXES, 0)),
             datatypes=int(values.get(c.OPT_MAX_DATATYPES, 0)),
         ),
-        stream_name=bytes(values.get(c.OPT_STREAM_NAME, b"")).decode("utf-8"),
+        stream_name=values.get(c.OPT_STREAM_NAME, b"").decode("utf-8"),
         generalized=bool(values.get(c.OPT_GENERALIZED, 0)),
         rdf_star=bool(values.get(c.OPT_RDF_STAR, 0)),
         # the parser infers namespace support from version >= 2
@@ -111,32 +122,35 @@ def split_frame(frame: bytes) -> Tuple[List[bytes], Dict[str, bytes]]:
     metadata: Dict[str, bytes] = {}
     pos = 0
     n = len(frame)
-    while pos < n:
-        if frame[pos] == 0x0A:  # FRAME_ROWS, wire type 2
-            pos += 1
-            ln = frame[pos]
-            pos += 1
-            if ln >= 0x80:
-                ln, pos = read_uvarint(frame, pos - 1)
-            end = pos + ln
-            if end > n:
-                raise ValueError("truncated length-delimited field")
-            rows.append(frame[pos:end])
-            pos = end
-        else:
-            break
+    try:
+        while pos < n:
+            if frame[pos] == 0x0A:  # FRAME_ROWS, wire type 2
+                pos += 1
+                ln = frame[pos]
+                pos += 1
+                if ln >= 0x80:
+                    ln, pos = read_uvarint(frame, pos - 1)
+                end = pos + ln
+                if end > n:
+                    raise c.JellyError("truncated frame row")
+                rows.append(frame[pos:end])
+                pos = end
+            else:
+                break
+    except IndexError:
+        raise c.JellyError("truncated frame row") from None
     if pos < n:  # metadata / unknown fields: generic walk of the tail
-        for field, _wt, value in iter_fields(frame[pos:]):
+        for field, wt, value in iter_fields(frame[pos:]):
             if field == c.FRAME_ROWS:
-                rows.append(bytes(value))
+                rows.append(field_bytes(wt, value))
             elif field == c.FRAME_METADATA:
-                key, payload = "", b""
-                for mf, _mw, mv in iter_fields(bytes(value)):
+                key, data = "", b""
+                for mf, mw, mv in iter_fields(field_bytes(wt, value)):
                     if mf == 1:
-                        key = bytes(mv).decode("utf-8")
+                        key = field_bytes(mw, mv).decode("utf-8")
                     elif mf == 2:
-                        payload = bytes(mv)
-                metadata[key] = payload
+                        data = field_bytes(mw, mv)
+                metadata[key] = data
     return rows, metadata
 
 
@@ -150,10 +164,10 @@ class StreamDecoder:
 
     def __init__(self, options: Optional[c.StreamOptions] = None) -> None:
         self.options = options
-        self._names: Optional[DecodeTable] = None
-        self._prefixes: Optional[DecodeTable] = None
-        self._datatypes: Optional[DecodeTable] = None
         self._repeated: List[Optional[Term]] = [None, None, None, None]
+        # until the options row sizes them the tables hold nothing, so a
+        # lookup entry or reference before it is out of range
+        self._names = self._prefixes = self._datatypes = DecodeTable(0)
         if options is not None:
             self._allocate(options)
 
@@ -189,7 +203,10 @@ class StreamDecoder:
         nt = self._names
         idx = name_id or nt.last_used + 1
         nt.last_used = idx
-        name = nt._values[idx - 1]
+        try:
+            name = nt._values[idx - 1]
+        except IndexError:
+            raise nt.out_of_range(idx) from None
         if name is None:
             raise c.JellyError(f"lookup index {idx} was never assigned")
         pt = self._prefixes
@@ -197,7 +214,10 @@ class StreamDecoder:
             eff = prefix_id or pt.last_used
             if eff:
                 pt.last_used = eff
-                prefix = pt._values[eff - 1]
+                try:
+                    prefix = pt._values[eff - 1]
+                except IndexError:
+                    raise pt.out_of_range(eff) from None
                 if prefix is None:
                     raise c.JellyError(f"lookup index {eff} was never assigned")
                 return ("iri", prefix + name)
@@ -229,7 +249,7 @@ class StreamDecoder:
                     ln, pos = read_uvarint(body, pos - 1)
                 end = pos + ln
                 if end > n:
-                    raise ValueError("truncated length-delimited field")
+                    raise c.JellyError("truncated length-delimited field")
                 if tag == 0x0A:
                     lex = body[pos:end].decode("utf-8")
                 else:
@@ -250,44 +270,44 @@ class StreamDecoder:
     def _decode_literal_slow(self, body: bytes) -> Term:
         lex, lang, datatype = "", "", ""
         datatype_id = None
-        for field, _wt, value in iter_fields(body):
+        for field, wt, value in iter_fields(body):
             if field == 1:
-                lex = bytes(value).decode("utf-8")
+                lex = field_bytes(wt, value).decode("utf-8")
             elif field == 2:
-                lang = bytes(value).decode("utf-8")
+                lang = field_bytes(wt, value).decode("utf-8")
             elif field == 3:
                 datatype_id = int(value)
         if not lang and datatype_id is not None and self._datatypes.capacity:
             datatype = self._datatypes.datatype_at(datatype_id)
         return ("lit", lex, lang, datatype)
 
-    def _decode_slot_term(self, kind_offset: int, value: object) -> Term:
+    def _decode_slot_term(self, kind_offset: int, value: bytes) -> Term:
         if kind_offset == 0:
-            return self._decode_iri(bytes(value))
+            return self._decode_iri(value)
         if kind_offset == 1:
-            return ("bnode", bytes(value).decode("utf-8"))
+            return ("bnode", value.decode("utf-8"))
         if kind_offset == 2:
-            return self._decode_literal(bytes(value))
-        return self._decode_quoted(bytes(value))
+            return self._decode_literal(value)
+        return self._decode_quoted(value)
 
     def _decode_quoted(self, body: bytes) -> Term:
         slots: List[Optional[Term]] = [None, None, None]
-        for field, _wt, value in iter_fields(body):
+        for field, wt, value in iter_fields(body):
             slot, offset = divmod(field - 1, 4)
-            slots[slot] = self._decode_slot_term(offset, value)
+            slots[slot] = self._decode_slot_term(offset, field_bytes(wt, value))
         if any(term is None for term in slots):
             raise c.JellyError("repeated terms are not allowed in quoted triples")
         return ("qt", slots[0], slots[1], slots[2])
 
-    def _decode_graph_term(self, offset: int, value: object) -> Term:
+    def _decode_graph_term(self, offset: int, value: bytes) -> Term:
         # offsets within the graph oneof: 0=iri 1=bnode 2=default 3=literal
         if offset == 0:
-            return self._decode_iri(bytes(value))
+            return self._decode_iri(value)
         if offset == 1:
-            return ("bnode", bytes(value).decode("utf-8"))
+            return ("bnode", value.decode("utf-8"))
         if offset == 2:
             return ("dg",)
-        return self._decode_literal(bytes(value))
+        return self._decode_literal(value)
 
     # ---------------------------------------------------------------- rows
     def _decode_statement(self, body: bytes, is_quad: bool) -> Term:
@@ -304,27 +324,17 @@ class StreamDecoder:
             pos += 1
             if tag >= 0x80:
                 tag, pos = read_uvarint(body, pos - 1)
-            wt = tag & 7
-            if wt == 2:
-                ln = body[pos]
-                pos += 1
-                if ln >= 0x80:
-                    ln, pos = read_uvarint(body, pos - 1)
-                end = pos + ln
-                if end > n:
-                    raise ValueError("truncated length-delimited field")
-                value: object = body[pos:end]
-                pos = end
-            elif wt == 0:
-                value, pos = read_uvarint(body, pos)
-            elif wt == 5:
-                value = body[pos : pos + 4]
-                pos += 4
-            elif wt == 1:
-                value = body[pos : pos + 8]
-                pos += 8
-            else:
-                raise ValueError(f"unsupported wire type {wt}")
+            if tag & 7 != 2:  # every statement field is a term message
+                raise c.JellyError(f"statement field has wire type {tag & 7}, not 2")
+            ln = body[pos]
+            pos += 1
+            if ln >= 0x80:
+                ln, pos = read_uvarint(body, pos - 1)
+            end = pos + ln
+            if end > n:
+                raise c.JellyError("truncated length-delimited field")
+            value = body[pos:end]
+            pos = end
             field = tag >> 3
             if field >= c.QUAD_G_IRI:
                 graph_term = self._decode_graph_term(field - c.QUAD_G_IRI, value)
@@ -332,13 +342,13 @@ class StreamDecoder:
                 continue
             slot, offset = divmod(field - 1, 4)
             if offset == 0:
-                term = self._decode_iri(bytes(value))
+                term = self._decode_iri(value)
             elif offset == 1:
-                term = ("bnode", bytes(value).decode("utf-8"))
+                term = ("bnode", value.decode("utf-8"))
             elif offset == 2:
-                term = self._decode_literal(bytes(value))
+                term = self._decode_literal(value)
             else:
-                term = self._decode_quoted(bytes(value))
+                term = self._decode_quoted(value)
             if slot == 0:
                 s = term
             elif slot == 1:
@@ -392,7 +402,7 @@ class StreamDecoder:
                 ln, pos = read_uvarint(row, 1)
             end = pos + ln
             if end > n:
-                raise ValueError("truncated length-delimited field")
+                raise c.JellyError("truncated length-delimited field")
             field = tag >> 3
             payload = row[pos:end]
         else:
@@ -429,17 +439,17 @@ class StreamDecoder:
             graph_fields = list(iter_fields(payload))
             if not graph_fields:
                 raise c.JellyError("graph_start row without a graph term")
-            gf, _gw, gv = graph_fields[0]
-            return ("graph_start", self._decode_graph_term(gf - 1, gv))
+            gf, gw, gv = graph_fields[0]
+            return ("graph_start", self._decode_graph_term(gf - 1, field_bytes(gw, gv)))
         if field == c.ROW_GRAPH_END:
             return ("graph_end",)
         if field == c.ROW_NAMESPACE:
             label, iri_term = "", None
-            for nf, _nw, nv in iter_fields(payload):
+            for nf, nw, nv in iter_fields(payload):
                 if nf == 1:
-                    label = bytes(nv).decode("utf-8")
+                    label = field_bytes(nw, nv).decode("utf-8")
                 elif nf == 2:
-                    iri_term = self._decode_iri(bytes(nv))
+                    iri_term = self._decode_iri(field_bytes(nw, nv))
             return ("namespace", label, iri_term)
         raise c.JellyError(f"unknown stream row field {field}")
 
@@ -484,15 +494,15 @@ def _entry(payload: bytes) -> Tuple[int, str]:
                 ln, pos = read_uvarint(payload, pos - 1)
             end = pos + ln
             if end > n:
-                raise ValueError("truncated length-delimited field")
+                raise c.JellyError("truncated length-delimited field")
             text = payload[pos:end].decode("utf-8")
             pos = end
         else:  # unknown field: generic walk (tolerated, as before)
-            for field, _wt, value in iter_fields(payload):
+            for field, wt, value in iter_fields(payload):
                 if field == 1:
                     entry_id = int(value)
                 elif field == 2:
-                    text = bytes(value).decode("utf-8")
+                    text = field_bytes(wt, value).decode("utf-8")
             return entry_id, text
     return entry_id, text
 

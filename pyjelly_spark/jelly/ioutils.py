@@ -3,20 +3,29 @@
 Replicates the reference's 3-byte delimitedness truth table
 (/root/reference/pyjelly/parse/ioutils.py:14-54) and varint
 length-prefixed frame walking (parse/ioutils.py:57-59).
+
+Every frame reader here consumes one walk, :func:`walk_frames`, over a
+pyarrow ``RandomAccessFile``: ``filesystem.open_input_file(...)`` for a
+file or object, ``pa.BufferReader`` for bytes already in memory. The
+walk holds one frame at a time, so a reader's residency is O(largest
+frame) whatever the size of the object.
 """
 
 from __future__ import annotations
 
-from typing import IO, Dict, Iterator, List, Optional, Tuple
+from typing import IO, Iterator, List, Optional, Tuple
+
+import pyarrow as pa
 
 from pyjelly_spark.jelly import constants as c
-from pyjelly_spark.jelly.decoder import (
-    StreamDecoder,
-    parse_options_row,
-    split_frame,
-)
+from pyjelly_spark.jelly.decoder import parse_options_row, split_frame
 from pyjelly_spark.jelly.encoder import delimit
-from pyjelly_spark.jelly.wire import iter_fields, read_uvarint
+from pyjelly_spark.jelly.wire import field_bytes, iter_fields, read_uvarint
+
+# First read of every frame: its length varint (at most 10 bytes) plus
+# the head of its body, enough for the scan's options-row probe (rows
+# tag, first row's length, first row's tag) and the whole of tiny frames.
+_HEAD_BYTES = 64
 
 
 def looks_delimited(head: bytes) -> bool:
@@ -35,60 +44,85 @@ def looks_delimited(head: bytes) -> bool:
     return head[0] != 0x0A or (head[1] == 0x0A and head[2] != 0x0A)
 
 
+def walk_frames(
+    source, start: int = 0, end: Optional[int] = None, heads: bool = False
+) -> Iterator[Tuple[int, int, int, bytes]]:
+    """The frame walk every reader shares: one ``(frame_start,
+    body_start, body_end, body)`` per varint-length-prefixed frame in
+    ``[start, end)`` of a pyarrow RandomAccessFile (``end`` defaults to
+    its size).
+
+    Each frame is one read: its body plus the next frame's head (length
+    prefix and first body bytes). With ``heads=True`` only heads are
+    read and ``body`` is the head's share of it. On a remote store each
+    read is a ranged request, so a walk makes one request per frame.
+
+    The only bound on a length prefix is the bytes left in the range,
+    checked before the body is read: a truncated or overlong prefix, or
+    a length past ``end``, raises JellyError without allocating, so
+    residency is O(one frame).
+    """
+    if end is None:
+        end = source.size()
+    pos = start
+    head = source.read_at(min(_HEAD_BYTES, end - pos), pos)
+    while pos < end:
+        try:
+            length, offset = read_uvarint(head, 0)
+        except c.JellyError as exc:
+            raise c.JellyError(f"{exc} in the frame length at byte {pos}") from None
+        body_start = pos + offset
+        body_end = body_start + length
+        if body_end > end:
+            raise c.JellyError(
+                f"truncated frame at byte {pos}: its {length}-byte body runs "
+                f"past the end of the range at byte {end}"
+            )
+        next_head = min(_HEAD_BYTES, end - body_end)
+        if heads or offset + length <= len(head):
+            body = head[offset : offset + length]
+            head = source.read_at(next_head, body_end)
+        else:
+            chunk = source.read_at(length + next_head, body_start)
+            body, head = chunk[:length], chunk[length:]
+        yield pos, body_start, body_end, body
+        pos = body_end
+
+
+def read_frames(source, start: int = 0, end: Optional[int] = None) -> Iterator[bytes]:
+    """All frame bodies of a Jelly byte range, delimited or not (the
+    range's first 3 bytes decide), walked from a RandomAccessFile."""
+    if end is None:
+        end = source.size()
+    if looks_delimited(source.read_at(min(3, end - start), start)):
+        for _start, _body_start, _body_end, body in walk_frames(source, start, end):
+            yield body
+    elif end > start:
+        yield source.read_at(end - start, start)
+
+
 def iter_delimited_frames(data: bytes) -> Iterator[bytes]:
     """Walk varint-length-prefixed frames in a byte buffer."""
-    pos = 0
-    end = len(data)
-    while pos < end:
-        length, pos = read_uvarint(data, pos)
-        frame = data[pos : pos + length]
-        if len(frame) != length:
-            raise c.JellyError("truncated frame")
-        pos += length
-        yield frame
+    return (body for _, _, _, body in walk_frames(pa.BufferReader(data)))
 
 
 def frames_from_bytes(data: bytes) -> Iterator[bytes]:
     """All frames of a Jelly byte buffer, delimited or not."""
-    if looks_delimited(data[:3]):
-        yield from iter_delimited_frames(data)
-    elif data:
-        yield data
+    return read_frames(pa.BufferReader(data))
 
 
 def read_stream_options(data: bytes) -> c.StreamOptions:
     """Extract the options row from the first non-empty frame."""
-    delimited = looks_delimited(data[:3])
     for frame in frames_from_bytes(data):
         rows, _meta = split_frame(frame)
         if rows:
-            fields = list(iter_fields(rows[0]))
-            if fields and fields[0][0] == c.ROW_OPTIONS:
-                return parse_options_row(bytes(fields[0][2]), delimited=delimited)
-            raise c.JellyError("first row of the stream is not an options row")
+            field, wire_type, value = next(iter_fields(rows[0]), (None, 2, b""))
+            if field != c.ROW_OPTIONS:
+                raise c.JellyError("first row of the stream is not an options row")
+            return parse_options_row(
+                field_bytes(wire_type, value), delimited=looks_delimited(data[:3])
+            )
     raise c.JellyError("no non-empty frames found in the stream")
-
-
-def decode_file(path: str) -> Iterator[tuple]:
-    """Decode a (possibly gzipped) .jelly file into flat statement
-    events."""
-    data = read_file_bytes(path)
-    from pyjelly_spark.jelly.decoder import decode_flat
-
-    yield from decode_flat(frames_from_bytes(data))
-
-
-def decode_file_frames(
-    path: str,
-) -> Iterator[Tuple[List[tuple], Dict[str, bytes]]]:
-    """Decode a .jelly file frame-by-frame: (events, frame metadata)."""
-    with open(path, "rb") as handle:
-        data = handle.read()
-    decoder = StreamDecoder()
-    for frame in frames_from_bytes(data):
-        rows, metadata = split_frame(frame)
-        events = [e for e in (decoder.decode_row(r) for r in rows) if e is not None]
-        yield events, metadata
 
 
 def write_frames(
@@ -122,18 +156,6 @@ def sniff_file(path: str, head_bytes: Optional[bytes] = None) -> bool:
     return looks_delimited(head_bytes)
 
 
-def buffered_options(inp: IO[bytes]) -> Tuple[c.StreamOptions, bytes]:
-    """Non-seekable-safe: buffer the input fully, return (options, data).
-
-    Mirrors the reference's BufferedReader peek fallback for network
-    streams (parse/ioutils.py:81-89), simplified for batch use: batch
-    decoding always consumes the whole stream, so one full read serves
-    both the sniff and the decode regardless of seekability.
-    """
-    data = inp.read()
-    return read_stream_options(data), data
-
-
 def read_file_bytes(path: str) -> bytes:
     """Read a (possibly gzip-compressed) jelly stream's bytes.
 
@@ -164,103 +186,87 @@ def build_frame_index(path: str) -> List[Tuple[int, int, int]]:
     front-to-back: the seekable-source pattern (HTTP range requests,
     object-store reads) the delimited format exists to support.
     """
-    with open(path, "rb") as handle:
-        data = handle.read()
-    if not looks_delimited(data[:3]):
-        raise c.JellyError("frame index requires a delimited stream")
-    from pyjelly_spark.jelly.decoder import split_frame
-
-    index: List[Tuple[int, int, int]] = []
-    pos = 0
-    n = len(data)
-    while pos < n:
-        length, body_start = read_uvarint(data, pos)
-        body_end = body_start + length
-        if body_end > n:
-            raise c.JellyError("truncated frame at end of stream")
-        rows, _meta = split_frame(data[body_start:body_end])
-        index.append((pos, body_end - pos, len(rows)))
-        pos = body_end
-    return index
+    with pa.OSFile(path) as source:
+        if not looks_delimited(source.read_at(3, 0)):
+            raise c.JellyError("frame index requires a delimited stream")
+        return [
+            (start, body_end - start, len(split_frame(body)[0]))
+            for start, _body_start, body_end, body in walk_frames(source)
+        ]
 
 
-def _frame_head_is_options(frame) -> bool:
-    """True iff the frame's FIRST row is an options row.
+def _frame_head_is_options(head: bytes, read_body) -> bool:
+    """True iff the frame's FIRST row is an options row: the
+    concatenation-boundary probe of :func:`read_segments`, since every
+    self-contained stream OPENS with an options row (parse/decode.py).
 
-    Pure varint-header walk: parses field headers until the first rows
-    field, then only the first row's first tag — no term decoding, no
-    lookup state. Used by :func:`scan_stream_segments` as the
-    concatenation-boundary probe: every self-contained stream OPENS
-    with an options row (the reference's decoder enforces
-    options-first, parse/decode.py; our StreamDecoder raises on any
-    other shape), so in a byte-concatenation of streams each member
-    starts at an options-headed frame.
+    A frame that leads with its rows field, as every frame this codec or
+    the reference writes does, is answered from ``head`` (rows tag,
+    first row's length and tag). Any other layout, or a head too short,
+    walks the whole body from ``read_body()``, where a rows field that
+    is not length-delimited raises JellyError.
     """
-    for num, _wt, val in iter_fields(frame):
-        if num != c.FRAME_ROWS:
-            continue
-        for rnum, _rwt, _rval in iter_fields(bytes(val)):
-            return rnum == c.ROW_OPTIONS
-        return False
+    try:
+        tag, pos = read_uvarint(head, 0)
+        if tag == 0x0A:  # FRAME_ROWS, wire type 2
+            length, pos = read_uvarint(head, pos)
+            return length > 0 and read_uvarint(head, pos)[0] >> 3 == c.ROW_OPTIONS
+    except c.JellyError:
+        pass  # the head ends before the answer
+    for num, wire_type, value in iter_fields(read_body()):
+        if num == c.FRAME_ROWS:
+            for row_field, _wt, _value in iter_fields(field_bytes(wire_type, value)):
+                return row_field == c.ROW_OPTIONS
+            return False
     return False
 
 
-def scan_stream_segments(data: bytes) -> List[Tuple[int, int, int]]:
-    """Split points of a (possibly concatenated) delimited Jelly buffer:
-    one ``(byte_start, byte_end, first_frame_idx)`` per independent
-    stream segment.
+def read_segments(source) -> List[Tuple[int, int, int]]:
+    """Split points of a (possibly concatenated) delimited Jelly object
+    in a RandomAccessFile: one ``(byte_start, byte_end,
+    first_frame_idx)`` per independent stream segment.
 
     A segment starts at byte 0 and at every frame whose first row is an
-    options row (see :func:`_frame_head_is_options`). CONTRACT — this
-    is concatenation semantics, and it is opt-in for a reason: the
-    Jelly protocol also permits a single continuing stream to RE-EMIT
-    its options row mid-stream (the reference validates repeated
-    options against stream state and keeps its lookup tables,
-    /root/reference/pyjelly/parse/decode.py:259-267). The two shapes
-    are byte-indistinguishable, so the caller declares which one the
-    file is. For genuine concatenations (``cat a.jelly b.jelly`` — the
-    append-to-one-object pattern) segment decoding with a FRESH decoder
-    per segment is the ONLY correct read: a single sequential decoder
-    carries stream A's lookup tables and auto-increment counters into
-    stream B and silently resolves B's references against them (every
-    Jelly implementation, the reference included, mis-decodes that
-    shape). For re-emitting single streams, segment decoding would be
-    wrong the opposite way — leave the default whole-file path on.
+    options row. CONTRACT — this is concatenation semantics, opt-in
+    because a single continuing stream may also RE-EMIT its options row
+    mid-stream (parse/decode.py:259-267) and the two shapes are
+    byte-indistinguishable. For genuine concatenations (``cat a.jelly
+    b.jelly``) decoding each segment with a FRESH decoder is the ONLY
+    correct read: a sequential decoder carries stream A's lookup tables
+    into stream B and silently resolves B's references against them.
+    For re-emitting single streams, segment decoding would be wrong the
+    opposite way.
 
-    A single-encoder file (one options row, at the head) yields one
-    segment, so the scan is shape-safe for the common case either way.
-    Cost: one varint length-walk over the frame framing plus a 2-tag
-    peek per frame — no row/term decode, bandwidth-bound.
-    Non-delimited buffers are one segment by definition.
+    A single-encoder file yields one segment; a non-delimited object is
+    one segment by definition. Cost: the frame walk over frame heads
+    only, one read per frame — no body, no row or term decode.
     """
-    if not looks_delimited(bytes(data[:3])):
-        return [(0, len(data), 0)]
-    mv = memoryview(data)
-    n = len(data)
+    end = source.size()
+    if not looks_delimited(source.read_at(min(3, end), 0)):
+        return [(0, end, 0)]
     starts: List[Tuple[int, int]] = []
-    pos = 0
-    fidx = 0
-    while pos < n:
-        length, body_start = read_uvarint(data, pos)
-        body_end = body_start + length
-        if body_end > n:
-            raise c.JellyError("truncated frame at end of stream")
-        if fidx == 0 or _frame_head_is_options(mv[body_start:body_end]):
-            starts.append((pos, fidx))
-        pos = body_end
-        fidx += 1
-    if not starts:
-        return [(0, n, 0)]
+    walk = walk_frames(source, heads=True)
+    for fidx, (start, body_start, body_end, head) in enumerate(walk):
+        if fidx == 0 or _frame_head_is_options(
+            head, lambda: source.read_at(body_end - body_start, body_start)
+        ):
+            starts.append((start, fidx))
     return [
-        (start, starts[i + 1][0] if i + 1 < len(starts) else n, first_frame)
+        (start, starts[i + 1][0] if i + 1 < len(starts) else end, first_frame)
         for i, (start, first_frame) in enumerate(starts)
     ]
 
 
+def scan_stream_segments(data: bytes) -> List[Tuple[int, int, int]]:
+    """:func:`read_segments` of a byte buffer."""
+    return read_segments(pa.BufferReader(data))
+
+
 def read_frame_at(path: str, offset: int, length: int) -> bytes:
     """Read one delimited frame's body given its index entry."""
-    with open(path, "rb") as handle:
-        handle.seek(offset)
-        chunk = handle.read(length)
-    flen, body_start = read_uvarint(chunk, 0)
-    return chunk[body_start : body_start + flen]
+    with pa.OSFile(path) as source:
+        for _start, _body_start, _body_end, body in walk_frames(
+            source, offset, offset + length
+        ):
+            return body
+    raise c.JellyError(f"no frame at byte {offset}")

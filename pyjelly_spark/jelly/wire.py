@@ -18,7 +18,9 @@ ascending tag order, matching protobuf's deterministic serialization
 
 from __future__ import annotations
 
-from typing import Iterator, List, Tuple
+from typing import Iterator, Tuple
+
+from pyjelly_spark.jelly.constants import JellyError
 
 
 def _uvarint_raw(value: int) -> bytes:
@@ -48,22 +50,25 @@ def uvarint(value: int) -> bytes:
 
 
 def read_uvarint(buf: bytes, pos: int) -> Tuple[int, int]:
-    """Decode a varint from ``buf`` at ``pos``; return (value, new_pos)."""
+    """Decode a varint from ``buf`` at ``pos``; return (value, new_pos).
+
+    Raises JellyError when ``buf`` ends inside the varint or the varint
+    runs past 10 bytes (64 bits).
+    """
     result = 0
     shift = 0
-    while True:
-        byte = buf[pos]
-        pos += 1
-        result |= (byte & 0x7F) << shift
-        if not byte & 0x80:
-            return result, pos
-        shift += 7
-        if shift > 63:
-            raise ValueError("varint too long")
-
-
-def tag_bytes(field_number: int, wire_type: int) -> bytes:
-    return uvarint((field_number << 3) | wire_type)
+    try:
+        while True:
+            byte = buf[pos]
+            pos += 1
+            result |= (byte & 0x7F) << shift
+            if not byte & 0x80:
+                return result, pos
+            shift += 7
+            if shift > 63:
+                raise JellyError("varint longer than 10 bytes")
+    except IndexError:
+        raise JellyError("truncated varint") from None
 
 
 def varint_field(field_number: int, value: int) -> bytes:
@@ -104,20 +109,26 @@ def iter_fields(buf: bytes) -> Iterator[Tuple[int, int, object]]:
             value, pos = read_uvarint(buf, pos)
         elif wire_type == 2:
             length, pos = read_uvarint(buf, pos)
+        elif wire_type == 5:
+            length = 4
+        elif wire_type == 1:
+            length = 8
+        else:
+            raise JellyError(f"unsupported wire type {wire_type}")
+        if wire_type:
             value = buf[pos : pos + length]
             if len(value) != length:
-                raise ValueError("truncated length-delimited field")
+                raise JellyError("truncated field")
             pos += length
-        elif wire_type == 5:
-            value = buf[pos : pos + 4]
-            pos += 4
-        elif wire_type == 1:
-            value = buf[pos : pos + 8]
-            pos += 8
-        else:
-            raise ValueError(f"unsupported wire type {wire_type}")
         yield field_number, wire_type, value
 
 
-def fields_to_list(buf: bytes) -> List[Tuple[int, int, object]]:
-    return list(iter_fields(buf))
+def field_bytes(wire_type: int, value) -> bytes:
+    """The bytes of a field the schema declares length-delimited.
+
+    Raises JellyError for any other wire type: ``bytes(n)`` of a varint
+    ``n`` would allocate n zero bytes.
+    """
+    if wire_type != 2:
+        raise JellyError(f"expected a length-delimited field, got wire type {wire_type}")
+    return bytes(value)

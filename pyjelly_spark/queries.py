@@ -21746,7 +21746,7 @@ ORACLES: dict[str, str] = {
 # --- Driver-gate window rotation (r5) ---------------------------------
 # The driver's correctness gate runs the FIRST 50 entries of QUERIES in
 # dict order; the remaining queries rely on the local strict sweep
-# (scripts/check_oracles.py, all 298). Per the r3 verdict, ~30 flagship
+# (scripts/check_oracles.py, all 299). Per the r3 verdict, ~30 flagship
 # queries stay pinned every round (one per first-class family: KG
 # pipeline + roundtrips, graph, SPARQL, TPC-H, dedup, embedding/ANN,
 # multimodal, streaming, text, vocab) and the remaining ~20 slots

@@ -213,15 +213,9 @@ class JellyReader(DataSourceReader):
 
     def read(self, partition: JellyFilePartition):
         _ensure_package()
-        from pyjelly_spark.sources.jelly_io import (
-            _decode_bytes_batches,
-            _fs_for,
-            _fs_read,
-        )
+        from pyjelly_spark.sources.jelly_io import _decode_path
 
-        filesystem, fs_path = _fs_for(partition.path)
-        data = _fs_read(filesystem, fs_path)
-        yield from _decode_bytes_batches(partition.path, data)
+        yield from _decode_path(partition.path)
 
 
 class JellyReaderPushdown(JellyReader):
@@ -285,15 +279,9 @@ class JellyStreamReader(DataSourceStreamReader):
 
     def read(self, partition: JellyFilePartition):
         _ensure_package()
-        from pyjelly_spark.sources.jelly_io import (
-            _decode_bytes_batches,
-            _fs_for,
-            _fs_read,
-        )
+        from pyjelly_spark.sources.jelly_io import _decode_path
 
-        filesystem, fs_path = _fs_for(partition.path)
-        data = _fs_read(filesystem, fs_path)
-        yield from _decode_bytes_batches(partition.path, data)
+        yield from _decode_path(partition.path)
 
     def commit(self, end: dict) -> None:
         # Source files are the caller's; nothing to clean up.

@@ -23,9 +23,10 @@ job checkpoint-resumable: a rerun skips partitions whose manifest entry
 exists and whose file sha still matches.
 
 Read side: a listing of .jelly files fans out over executors; each file
-decodes independently (streams are self-contained by construction) and
-yields bounded Arrow chunks (constant worker memory for multi-GB
-streams). Every statement carries its ``frame_id``, so grouped streams
+decodes independently (streams are self-contained by construction),
+walked frame by frame from an open file, and yields bounded Arrow
+chunks (worker memory is one frame plus one chunk, for multi-GB
+streams too). Every statement carries its ``frame_id``, so grouped streams
 are recovered by grouping on (source_file, frame_id) — the distributed
 analogue of ``parse_jelly_grouped`` (one group per frame,
 /root/reference/pyjelly/integrations/generic/parse.py:230-317).
@@ -58,7 +59,7 @@ from pyjelly_spark.jelly import constants as jc
 from pyjelly_spark.jelly.decoder import StreamDecoder, split_frame
 from pyjelly_spark.jelly.encoder import StreamEncoder, delimit
 from pyjelly_spark.jelly.grouped import grouped_options
-from pyjelly_spark.jelly.ioutils import frames_from_bytes
+from pyjelly_spark.jelly.ioutils import read_frames, read_segments
 
 # ---------------------------------------------------------------------------
 # Filesystem abstraction (cluster-portable I/O)
@@ -107,9 +108,10 @@ def _fs_listdir(
     ]
 
 
-def _fs_read(filesystem, path: str) -> bytes:
-    with filesystem.open_input_stream(path) as handle:
-        return handle.read()
+def _fs_open(path: str):
+    """Open a path or URI for ranged reads (a pyarrow RandomAccessFile)."""
+    filesystem, fs_path = _fs_for(path)
+    return filesystem.open_input_file(fs_path)
 
 
 def _fs_write(filesystem, path: str, data: bytes) -> None:
@@ -195,7 +197,8 @@ def load_manifest(out_dir: str) -> dict:
     entries = {}
     for path in _fs_listdir(filesystem, posixpath.join(base, "_manifest")):
         if path.endswith(".json"):
-            entry = json.loads(_fs_read(filesystem, path))
+            with filesystem.open_input_stream(path) as handle:
+                entry = json.loads(handle.read())
             entries[entry["partition_id"]] = entry
     return entries
 
@@ -589,14 +592,15 @@ def _arrow_read_schema():
     )
 
 
-def _decode_bytes_batches(
+def _decode_batches(
     source: str,
-    data: bytes,
+    frames: Iterator[bytes],
     logical_type_strict: Optional[str] = None,
     frame_id_offset: int = 0,
 ):
-    """Decode one self-contained Jelly stream into bounded Arrow
-    RecordBatches of flat statement rows (with frame_id / stmt_idx).
+    """Decode the frames of one self-contained Jelly stream into bounded
+    Arrow RecordBatches of flat statement rows (with frame_id /
+    stmt_idx).
 
     Columnar construction: 19 python lists -> pa.array (C conversion),
     never a row-tuple list — the statement decode itself is the only
@@ -635,7 +639,7 @@ def _decode_bytes_batches(
             col.clear()
         return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
-    for frame_id, frame in enumerate(frames_from_bytes(data), start=frame_id_offset):
+    for frame_id, frame in enumerate(frames, start=frame_id_offset):
         frame_rows, _meta = split_frame(frame)
         for row in frame_rows:
             event = decoder.decode_row(row)
@@ -676,10 +680,23 @@ def _decode_bytes_batches(
         yield flush()
 
 
-def _decode_bytes_chunked(source: str, data: bytes) -> Iterator[pd.DataFrame]:
-    """Pandas view of _decode_bytes_batches (for pandas consumers)."""
-    for batch in _decode_bytes_batches(source, data):
-        yield batch.to_pandas()
+def _decode_path(
+    source: str,
+    logical_type_strict: Optional[str] = None,
+    start: int = 0,
+    end: Optional[int] = None,
+    frame_id_offset: int = 0,
+):
+    """:func:`_decode_batches` of one .jelly object, or of its byte range
+    ``[start, end)``, walked frame by frame from an open file: the task
+    holds one frame and one Arrow chunk, never the object."""
+    with _fs_open(source) as handle:
+        yield from _decode_batches(
+            source,
+            read_frames(handle, start, end),
+            logical_type_strict,
+            frame_id_offset,
+        )
 
 
 def read_jelly(
@@ -697,47 +714,39 @@ def read_jelly(
     distributed ``parse_jelly_grouped``. GRAPHS brackets are resolved to
     quads with the bracketing graph term.
 
-    STRAGGLER CONTRACT (one task per file): intra-file parallelism is
-    impossible for a single Jelly stream because the prefix/name/
-    datatype lookup tables accumulate SEQUENTIALLY across frames — a
-    frame in the middle of a foreign file can reference table entries
-    declared gigabytes earlier, so a split task would need the full
-    prefix replayed anyway (the frame seek index in
-    ``ioutils.build_frame_index`` gives random access to frame BYTES,
-    not to decoder STATE). Files written by this repo are immune: the writers
-    bound each output stream at ``rows_per_stream`` (default 200k)
-    statements, so task skew is capped by construction. For FOREIGN
-    multi-GB single-stream files, the decode wall is the one file's
-    sequential decode (~165k stmts/s/core pure-Python) regardless of
-    cluster size — mitigate by re-sharding once through
-    ``read_jelly -> write_jelly`` (bounded streams out), after which
-    every later read scales with file count. This matches the
-    reference's own contract: its parsers are single-stream sequential
-    too (parse.py); no Jelly implementation can split lookup state.
+    STRAGGLER CONTRACT (one task per file): every read path walks each
+    object frame by frame from an open file (``ioutils.walk_frames``),
+    so a task holds one frame plus one Arrow chunk whatever the object's
+    size; memory never limits the file size a task can read, time does.
+    A single Jelly stream cannot be split: its lookup tables accumulate
+    SEQUENTIALLY across frames, so a mid-file frame can reference
+    entries declared gigabytes earlier (``ioutils.build_frame_index``
+    gives random access to frame BYTES, not to decoder STATE). Files
+    written by this repo are immune: writers bound each stream at
+    ``rows_per_stream`` (default 200k) statements. A FOREIGN multi-GB
+    single-stream file decodes at one core's rate (~165k stmts/s) on
+    any cluster — re-shard it once through ``read_jelly -> write_jelly``
+    and later reads scale with file count. The reference's parsers are
+    single-stream sequential too (parse.py).
 
     ``split_foreign_files=True`` declares CONCATENATION SEMANTICS and
     recovers intra-file parallelism from it: each options-headed frame
-    is treated as the start of an independent stream
-    (``ioutils.scan_stream_segments``), so a concatenated object
-    (``cat a.jelly b.jelly`` — the object-store append pattern)
-    decodes as byte-range segments, one task each, with FRESH decoder
-    state per segment. For that shape this is also the only CORRECT
-    read: a sequential decoder carries stream A's lookup tables and
-    auto-increment counters into stream B and silently resolves B's
-    references against them — every Jelly implementation including the
-    reference mis-decodes concatenations (the reference
-    validates-and-continues on repeated options rows,
-    parse/decode.py:259-267, which serves the OTHER shape: one
-    continuing stream re-emitting its options mid-stream; for such
-    streams keep this flag off, the two shapes are
-    byte-indistinguishable and the caller must declare). Mechanics: a
-    cheap distributed pre-pass walks only the varint framing (no term
-    decode), then segments shuffle across the cluster and decode in
-    parallel; frame_id stays file-global (segment frame offsets are
-    carried through), stmt_idx restarts per segment — order by
-    (source_file, frame_id, stmt_idx), total either way.
-    Single-encoder files collapse to one segment and decode exactly as
-    the default path, at the cost of one extra framing walk per file.
+    starts an independent stream (``ioutils.read_segments``), so a
+    concatenated object (``cat a.jelly b.jelly`` — the object-store
+    append pattern) decodes as byte-range segments, one task each, with
+    FRESH decoder state per segment. For that shape it is also the only
+    CORRECT read: a sequential decoder carries stream A's lookup tables
+    into stream B and silently mis-resolves B's references (so does
+    every Jelly implementation; the reference validates-and-continues on
+    repeated options rows, parse/decode.py:259-267, which serves the
+    OTHER, byte-indistinguishable shape: one stream re-emitting its
+    options — keep this flag off for those). Mechanics: a distributed
+    pre-pass walks only frame HEADS (length prefix plus the first body
+    bytes, enough to see an options row); segments then shuffle across
+    the cluster and each task walks only its own byte range. frame_id
+    stays file-global, stmt_idx restarts per segment — order by
+    (source_file, frame_id, stmt_idx). Single-encoder files collapse to
+    one segment and decode as the default path, plus one head-only walk.
 
     ``logical_type_strict``: None (default, route by physical type
     only), "flat", or "grouped" — the reference's strict gate
@@ -762,12 +771,7 @@ def read_jelly(
     def decode_files(batches):
         for batch in batches:
             for source in batch.column("source_file").to_pylist():
-                filesystem, fs_path = _fs_for(source)
-                yield from _decode_bytes_batches(
-                    source,
-                    _fs_read(filesystem, fs_path),
-                    logical_type_strict,
-                )
+                yield from _decode_path(source, logical_type_strict)
 
     # mapInArrow: RecordBatches flow straight from the decoder's columnar
     # builders to the JVM; no pandas materialization on the read path
@@ -781,17 +785,15 @@ def _read_jelly_split(
 ) -> DataFrame:
     """Two-stage segment-parallel decode (read_jelly split_foreign_files).
 
-    Stage 1 (one task per file): walk the varint framing and emit one
-    row per cold-state segment. Stage 2 (one task per SEGMENT, after a
+    Stage 1 (one task per file): walk the frame heads and emit one row
+    per cold-state segment. Stage 2 (one task per SEGMENT, after a
     repartition that spreads a single file's segments over the
-    cluster): range-read the segment's bytes and decode with a fresh
+    cluster): walk the segment's byte range frame by frame with a fresh
     decoder, frame_ids offset to stay file-global.
     """
 
     def scan_files(batches):
         import pyarrow as pa
-
-        from pyjelly_spark.jelly.ioutils import scan_stream_segments
 
         for batch in batches:
             srcs: List[str] = []
@@ -799,10 +801,9 @@ def _read_jelly_split(
             seg_ends: List[int] = []
             frame_offsets: List[int] = []
             for source in batch.column("source_file").to_pylist():
-                filesystem, fs_path = _fs_for(source)
-                for start, end, first_frame in scan_stream_segments(
-                    _fs_read(filesystem, fs_path)
-                ):
+                with _fs_open(source) as handle:
+                    segments = read_segments(handle)
+                for start, end, first_frame in segments:
                     srcs.append(source)
                     seg_starts.append(start)
                     seg_ends.append(end)
@@ -834,15 +835,8 @@ def _read_jelly_split(
                 batch.column("frame_offset").to_pylist(),
             )
             for source, start, end, frame_offset in rows:
-                filesystem, fs_path = _fs_for(source)
-                with filesystem.open_input_file(fs_path) as handle:
-                    handle.seek(start)
-                    data = handle.read(end - start)
-                yield from _decode_bytes_batches(
-                    source,
-                    data,
-                    logical_type_strict,
-                    frame_id_offset=frame_offset,
+                yield from _decode_path(
+                    source, logical_type_strict, start, end, frame_offset
                 )
 
     n_parts = max(
@@ -898,13 +892,14 @@ def read_jelly_stream(
     )
 
     def decode_files(batches):
+        import pyarrow as pa
+
         for batch in batches:
             sources = batch.column("path").to_pylist()
-            contents = batch.column("content").to_pylist()
-            for source, data in zip(sources, contents):
-                yield from _decode_bytes_batches(
-                    source, bytes(data), logical_type_strict
-                )
+            for source, content in zip(sources, batch.column("content")):
+                # the content buffer is wrapped, not copied to bytes
+                frames = read_frames(pa.BufferReader(content.as_buffer()))
+                yield from _decode_batches(source, frames, logical_type_strict)
 
     return stream.mapInArrow(decode_files, schema=READ_SCHEMA)
 
@@ -937,24 +932,17 @@ def read_jelly_frame_meta(spark: SparkSession, path: str) -> DataFrame:
     def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             for source in batch["source_file"]:
-                filesystem, fs_path = _fs_for(source)
-                data = _fs_read(filesystem, fs_path)
                 rows = []
-                for frame_id, frame in enumerate(frames_from_bytes(data)):
-                    frame_rows, metadata = split_frame(frame)
-                    if metadata:
-                        for key in sorted(metadata):
-                            rows.append(
-                                (
-                                    source,
-                                    frame_id,
-                                    len(frame_rows),
-                                    key,
-                                    metadata[key].decode("latin1"),
-                                )
-                            )
-                    else:
-                        rows.append((source, frame_id, len(frame_rows), None, None))
+                with _fs_open(source) as handle:
+                    for frame_id, frame in enumerate(read_frames(handle)):
+                        frame_rows, metadata = split_frame(frame)
+                        n_rows = len(frame_rows)
+                        rows.extend(
+                            (source, frame_id, n_rows, key, metadata[key].decode("latin1"))
+                            for key in sorted(metadata)
+                        )
+                        if not metadata:
+                            rows.append((source, frame_id, n_rows, None, None))
                 if rows:
                     yield pd.DataFrame(
                         rows, columns=[f.name for f in FRAME_META_SCHEMA]
@@ -984,16 +972,13 @@ def read_jelly_namespaces(spark: SparkSession, path: str) -> DataFrame:
     def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             for source in batch["source_file"]:
-                filesystem, fs_path = _fs_for(source)
-                data = _fs_read(filesystem, fs_path)
                 decoder = StreamDecoder()
                 rows = []
-                for frame in frames_from_bytes(data):
-                    frame_rows, _meta = split_frame(frame)
-                    for row in frame_rows:
-                        event = decoder.decode_row(row)
-                        if event is not None and event[0] == "namespace":
-                            rows.append((source, event[1], event[2][1]))
+                with _fs_open(source) as handle:
+                    for frame in read_frames(handle):
+                        for event in decoder.decode_frame(frame):
+                            if event[0] == "namespace":
+                                rows.append((source, event[1], event[2][1]))
                 if rows:
                     yield pd.DataFrame(
                         rows, columns=[f.name for f in NAMESPACE_SCHEMA]
@@ -1051,21 +1036,20 @@ def transcode(
 
 def read_manifest_frames(path: str) -> List[dict]:
     """Frame-level stats of one .jelly file (debug/lineage helper)."""
-    filesystem, fs_path = _fs_for(path)
-    data = _fs_read(filesystem, fs_path)
     decoder = StreamDecoder()
     out = []
-    for i, frame in enumerate(frames_from_bytes(data)):
-        rows, metadata = split_frame(frame)
-        events = [e for e in (decoder.decode_row(r) for r in rows) if e is not None]
-        out.append(
-            {
-                "frame": i,
-                "rows": len(rows),
-                "statements": len(events),
-                "metadata": {k: v.decode("latin1") for k, v in metadata.items()},
-            }
-        )
+    with _fs_open(path) as handle:
+        for i, frame in enumerate(read_frames(handle)):
+            rows, metadata = split_frame(frame)
+            events = [e for e in (decoder.decode_row(r) for r in rows) if e is not None]
+            out.append(
+                {
+                    "frame": i,
+                    "rows": len(rows),
+                    "statements": len(events),
+                    "metadata": {k: v.decode("latin1") for k, v in metadata.items()},
+                }
+            )
     return out
 
 

@@ -18,15 +18,38 @@ import pytest
 
 from pyjelly_spark.jelly import constants as jc
 from pyjelly_spark.jelly.constants import JellyError, StreamOptions, TablePreset
-from pyjelly_spark.jelly.decoder import DecodeTable, StreamDecoder
+from pyjelly_spark.jelly.decoder import (
+    DecodeTable,
+    StreamDecoder,
+    decode_flat,
+    split_frame,
+)
 from pyjelly_spark.jelly.encoder import StreamEncoder, delimit, encode_flat
 from pyjelly_spark.jelly.ioutils import (
     frames_from_bytes,
     iter_delimited_frames,
     read_stream_options,
+    scan_stream_segments,
     write_frames,
 )
-from pyjelly_spark.jelly.wire import len_field, str_field, varint_field
+from pyjelly_spark.jelly.wire import len_field, str_field, uvarint, varint_field
+
+# The three frame readers every malformed-input case must go through: the
+# walk, the segment scan and the flat decode.
+READERS = {
+    "walk": lambda data: list(iter_delimited_frames(data)),
+    "scan": scan_stream_segments,
+    "decode": lambda data: list(decode_flat(frames_from_bytes(data))),
+}
+
+
+def _stream(n: int = 3, preset: TablePreset = TablePreset(), tag: str = "e") -> bytes:
+    statements = [
+        (iri(f"http://{tag}/s{i}"), iri(f"http://{tag}/p"), ("lit", f"v{i}", "", ""))
+        for i in range(n)
+    ]
+    options = StreamOptions(preset=preset, frame_rows=10)
+    return b"".join(delimit(f) for f in encode_flat(statements, options))
 
 
 def iri(v):
@@ -120,6 +143,46 @@ class TestDecoderIndexGuards:
         with pytest.raises(JellyError, match="never assigned"):
             decoder.decode_row(len_field(jc.ROW_TRIPLE, body))
 
+    def test_put_beyond_capacity_raises(self):
+        with pytest.raises(JellyError, match="index 9 .*capacity 8"):
+            DecodeTable(8).put(9, "x")
+
+    def test_sequential_put_beyond_capacity_raises(self):
+        table = DecodeTable(8)
+        for i in range(8):
+            table.put(0, f"n{i}")
+        with pytest.raises(JellyError, match="index 9 .*capacity 8"):
+            table.put(0, "one too many")
+
+    def test_fetch_beyond_capacity_raises(self):
+        with pytest.raises(JellyError, match="index 9 .*capacity 8"):
+            DecodeTable(8).fetch(9)
+
+    def test_iri_index_beyond_capacity_in_stream_raises(self):
+        decoder = StreamDecoder(StreamOptions(preset=TablePreset(names=8)))
+        body = (
+            len_field(jc.SLOT_SUBJECT_BASE, varint_field(2, 9))
+            + str_field(jc.SLOT_PREDICATE_BASE + 1, "b1")
+            + str_field(jc.SLOT_OBJECT_BASE + 1, "b2")
+        )
+        with pytest.raises(JellyError, match="index 9 .*capacity 8"):
+            decoder.decode_row(len_field(jc.ROW_TRIPLE, body))
+
+    def test_lookup_entry_before_options_raises(self):
+        with pytest.raises(JellyError, match="capacity 0"):
+            StreamDecoder().decode_row(
+                len_field(jc.ROW_NAME_ENTRY, str_field(2, "http://e/"))
+            )
+
+    def test_concatenated_streams_decoded_sequentially_raise(self):
+        """Nine same-preset streams in one object, decoded as ONE stream:
+        stream 2's first name entry lands past the table stream 1 filled."""
+        preset = TablePreset(names=8, prefixes=4, datatypes=2)
+        data = b"".join(_stream(30, preset, f"e{k}") for k in range(9))
+        assert len(scan_stream_segments(data)) == 9
+        with pytest.raises(JellyError, match="capacity 8"):
+            list(decode_flat(frames_from_bytes(data)))
+
     def test_quoted_triple_repeats_forbidden(self):
         decoder = StreamDecoder(StreamOptions(rdf_star=True))
         # quoted triple missing its predicate slot = illegal repeat
@@ -174,6 +237,21 @@ class TestFramingViolations:
         with pytest.raises(JellyError, match="truncated"):
             list(iter_delimited_frames(data))
 
+    @pytest.mark.parametrize("reader", sorted(READERS))
+    def test_truncated_length_varint_raises(self, reader):
+        with pytest.raises(JellyError, match="truncated"):
+            READERS[reader](_stream() + b"\x80")
+
+    @pytest.mark.parametrize("reader", sorted(READERS))
+    def test_overlong_length_varint_raises(self, reader):
+        with pytest.raises(JellyError, match="longer than 10 bytes"):
+            READERS[reader](_stream() + b"\xff" * 10 + b"\x01")
+
+    @pytest.mark.parametrize("reader", sorted(READERS))
+    def test_length_past_end_raises(self, reader):
+        with pytest.raises(JellyError, match="truncated frame"):
+            READERS[reader](_stream() + uvarint(1 << 62) + b"\x0a\x00")
+
     def test_non_delimited_multi_frame_write_raises(self):
         with pytest.raises(JellyError, match="single frame"):
             import io
@@ -203,3 +281,34 @@ class TestFramingViolations:
 
     def test_frames_from_empty_bytes(self):
         assert list(frames_from_bytes(b"")) == []
+
+
+class TestFrameWireTypes:
+    """A frame's rows field must be length-delimited. Read as a varint
+    ``n`` it would make ``bytes(n)`` allocate n zero bytes."""
+
+    ROWS_AS_VARINT = b"\x08" + uvarint(1 << 24)  # field 1, wire type 0
+
+    def test_scan_rejects_varint_rows_field(self):
+        data = _stream() + delimit(self.ROWS_AS_VARINT)
+        with pytest.raises(JellyError, match="wire type 0"):
+            scan_stream_segments(data)
+
+    def test_split_frame_rejects_varint_rows_field(self):
+        with pytest.raises(JellyError, match="wire type 0"):
+            split_frame(self.ROWS_AS_VARINT)
+
+    def test_split_frame_rejects_varint_metadata_field(self):
+        frame = len_field(jc.FRAME_ROWS, b"") + varint_field(jc.FRAME_METADATA, 1 << 24)
+        with pytest.raises(JellyError, match="wire type 0"):
+            split_frame(frame)
+
+    @pytest.mark.parametrize("reader", ["decode", "scan"])
+    @pytest.mark.parametrize("wire_type", [0, 1, 3, 4, 5, 6, 7])
+    def test_non_delimited_rows_field_raises(self, reader, wire_type):
+        """The readers that look inside frames; the walk only frames."""
+        good = _stream()
+        bad = bytes([(jc.FRAME_ROWS << 3) | wire_type]) + b"\x01" * 12
+        data = good + delimit(bad) + good
+        with pytest.raises(JellyError):
+            READERS[reader](data)
