@@ -20,7 +20,7 @@ from __future__ import annotations
 from typing import Dict, Iterable, Iterator, List, Optional, Tuple
 
 from pyjelly_spark.jelly import constants as c
-from pyjelly_spark.jelly.wire import field_bytes, iter_fields, read_uvarint
+from pyjelly_spark.jelly.wire import field_bytes, field_varint, iter_fields, read_uvarint
 
 Term = tuple
 
@@ -80,12 +80,29 @@ class DecodeTable:
         return self.fetch(index)
 
 
+_VARINT_OPTIONS = frozenset(
+    (
+        c.OPT_PHYSICAL_TYPE,
+        c.OPT_GENERALIZED,
+        c.OPT_RDF_STAR,
+        c.OPT_MAX_NAMES,
+        c.OPT_MAX_PREFIXES,
+        c.OPT_MAX_DATATYPES,
+        c.OPT_LOGICAL_TYPE,
+        c.OPT_VERSION,
+    )
+)
+
+
 def parse_options_row(body: bytes, delimited: bool) -> c.StreamOptions:
     """Materialize a StreamOptions from an RdfStreamOptions message body."""
     values: Dict[int, object] = {}
     for field, wt, value in iter_fields(body):
-        values[field] = field_bytes(wt, value) if field == c.OPT_STREAM_NAME else value
-    version = int(values.get(c.OPT_VERSION, 0))
+        if field == c.OPT_STREAM_NAME:
+            values[field] = field_bytes(wt, value)
+        elif field in _VARINT_OPTIONS:
+            values[field] = field_varint(wt, value)
+    version = values.get(c.OPT_VERSION, 0)
     if version > c.PROTO_VERSION_WITH_NAMESPACES:
         # Jelly spec: a consumer MUST reject a stream declaring a
         # version above what it supports (we speak 1 and 2)
@@ -94,12 +111,12 @@ def parse_options_row(body: bytes, delimited: bool) -> c.StreamOptions:
             f"(max {c.PROTO_VERSION_WITH_NAMESPACES})"
         )
     return c.StreamOptions(
-        physical_type=int(values.get(c.OPT_PHYSICAL_TYPE, 0)),
-        logical_type=int(values.get(c.OPT_LOGICAL_TYPE, 0)),
+        physical_type=values.get(c.OPT_PHYSICAL_TYPE, 0),
+        logical_type=values.get(c.OPT_LOGICAL_TYPE, 0),
         preset=c.TablePreset(
-            names=int(values.get(c.OPT_MAX_NAMES, 0)),
-            prefixes=int(values.get(c.OPT_MAX_PREFIXES, 0)),
-            datatypes=int(values.get(c.OPT_MAX_DATATYPES, 0)),
+            names=values.get(c.OPT_MAX_NAMES, 0),
+            prefixes=values.get(c.OPT_MAX_PREFIXES, 0),
+            datatypes=values.get(c.OPT_MAX_DATATYPES, 0),
         ),
         stream_name=values.get(c.OPT_STREAM_NAME, b"").decode("utf-8"),
         generalized=bool(values.get(c.OPT_GENERALIZED, 0)),
@@ -225,11 +242,11 @@ class StreamDecoder:
 
     def _decode_iri_slow(self, body: bytes) -> Term:
         prefix_id = name_id = 0
-        for field, _wt, value in iter_fields(body):
+        for field, wt, value in iter_fields(body):
             if field == 1:
-                prefix_id = int(value)
+                prefix_id = field_varint(wt, value)
             elif field == 2:
-                name_id = int(value)
+                name_id = field_varint(wt, value)
         name = self._names.name_at(name_id)
         prefix = self._prefixes.prefix_at(prefix_id) if self._prefixes.capacity else ""
         return ("iri", prefix + name)
@@ -276,7 +293,7 @@ class StreamDecoder:
             elif field == 2:
                 lang = field_bytes(wt, value).decode("utf-8")
             elif field == 3:
-                datatype_id = int(value)
+                datatype_id = field_varint(wt, value)
         if not lang and datatype_id is not None and self._datatypes.capacity:
             datatype = self._datatypes.datatype_at(datatype_id)
         return ("lit", lex, lang, datatype)
@@ -389,69 +406,75 @@ class StreamDecoder:
 
         Every real row is a single length-delimited oneof field with a
         one-byte tag; that shape is parsed inline, anything else drops to
-        the generic walk below.
+        the generic walk below. A malformed row raises JellyError.
         """
-        n = len(row)
-        if not n:
-            return None
-        tag = row[0]
-        if tag < 0x80 and tag & 7 == 2:
-            ln = row[1]
-            pos = 2
-            if ln >= 0x80:
-                ln, pos = read_uvarint(row, 1)
-            end = pos + ln
-            if end > n:
-                raise c.JellyError("truncated length-delimited field")
-            field = tag >> 3
-            payload = row[pos:end]
-        else:
-            fields = list(iter_fields(row))
-            if not fields:
+        try:
+            n = len(row)
+            if not n:
                 return None
-            field, _wt, value = fields[0]
-            payload = bytes(value) if not isinstance(value, int) else b""
-        if field == c.ROW_TRIPLE:
-            return self._decode_statement(payload, is_quad=False)
-        if field == c.ROW_QUAD:
-            return self._decode_statement(payload, is_quad=True)
-        if field == c.ROW_NAME_ENTRY:
-            entry_id, text = _entry(payload)
-            self._names.put(entry_id, text)
-            return None
-        if field == c.ROW_PREFIX_ENTRY:
-            entry_id, text = _entry(payload)
-            self._prefixes.put(entry_id, text)
-            return None
-        if field == c.ROW_DATATYPE_ENTRY:
-            entry_id, text = _entry(payload)
-            self._datatypes.put(entry_id, text)
-            return None
-        if field == c.ROW_OPTIONS:
-            parsed = parse_options_row(payload, delimited=True)
-            if self.options is None:
-                self.options = parsed
-                self._allocate(parsed)
+            tag = row[0]
+            if tag < 0x80 and tag & 7 == 2:
+                ln = row[1]
+                pos = 2
+                if ln >= 0x80:
+                    ln, pos = read_uvarint(row, 1)
+                end = pos + ln
+                if end > n:
+                    raise c.JellyError("truncated length-delimited field")
+                field = tag >> 3
+                payload = row[pos:end]
             else:
-                self._validate(parsed)
-            return None
-        if field == c.ROW_GRAPH_START:
-            graph_fields = list(iter_fields(payload))
-            if not graph_fields:
-                raise c.JellyError("graph_start row without a graph term")
-            gf, gw, gv = graph_fields[0]
-            return ("graph_start", self._decode_graph_term(gf - 1, field_bytes(gw, gv)))
-        if field == c.ROW_GRAPH_END:
-            return ("graph_end",)
-        if field == c.ROW_NAMESPACE:
-            label, iri_term = "", None
-            for nf, nw, nv in iter_fields(payload):
-                if nf == 1:
-                    label = field_bytes(nw, nv).decode("utf-8")
-                elif nf == 2:
-                    iri_term = self._decode_iri(field_bytes(nw, nv))
-            return ("namespace", label, iri_term)
-        raise c.JellyError(f"unknown stream row field {field}")
+                fields = list(iter_fields(row))
+                if not fields:
+                    return None
+                field, _wt, value = fields[0]
+                payload = bytes(value) if not isinstance(value, int) else b""
+            if field == c.ROW_TRIPLE:
+                return self._decode_statement(payload, is_quad=False)
+            if field == c.ROW_QUAD:
+                return self._decode_statement(payload, is_quad=True)
+            if field == c.ROW_NAME_ENTRY:
+                entry_id, text = _entry(payload)
+                self._names.put(entry_id, text)
+                return None
+            if field == c.ROW_PREFIX_ENTRY:
+                entry_id, text = _entry(payload)
+                self._prefixes.put(entry_id, text)
+                return None
+            if field == c.ROW_DATATYPE_ENTRY:
+                entry_id, text = _entry(payload)
+                self._datatypes.put(entry_id, text)
+                return None
+            if field == c.ROW_OPTIONS:
+                parsed = parse_options_row(payload, delimited=True)
+                if self.options is None:
+                    self.options = parsed
+                    self._allocate(parsed)
+                else:
+                    self._validate(parsed)
+                return None
+            if field == c.ROW_GRAPH_START:
+                graph_fields = list(iter_fields(payload))
+                if not graph_fields:
+                    raise c.JellyError("graph_start row without a graph term")
+                gf, gw, gv = graph_fields[0]
+                return ("graph_start", self._decode_graph_term(gf - 1, field_bytes(gw, gv)))
+            if field == c.ROW_GRAPH_END:
+                return ("graph_end",)
+            if field == c.ROW_NAMESPACE:
+                label, iri_term = "", None
+                for nf, nw, nv in iter_fields(payload):
+                    if nf == 1:
+                        label = field_bytes(nw, nv).decode("utf-8")
+                    elif nf == 2:
+                        iri_term = self._decode_iri(field_bytes(nw, nv))
+                return ("namespace", label, iri_term)
+            raise c.JellyError(f"unknown stream row field {field}")
+        except (IndexError, UnicodeDecodeError) as exc:
+            # a row body that ends inside a field the inline fast paths
+            # index into (e.g. a tag with no length byte), or a string
+            # field that is not UTF-8
+            raise c.JellyError(f"malformed stream row: {exc}") from exc
 
     def _validate(self, parsed: c.StreamOptions) -> None:
         """Options rows after the first must agree with the stream
@@ -500,7 +523,7 @@ def _entry(payload: bytes) -> Tuple[int, str]:
         else:  # unknown field: generic walk (tolerated, as before)
             for field, wt, value in iter_fields(payload):
                 if field == 1:
-                    entry_id = int(value)
+                    entry_id = field_varint(wt, value)
                 elif field == 2:
                     text = field_bytes(wt, value).decode("utf-8")
             return entry_id, text

@@ -132,3 +132,14 @@ def field_bytes(wire_type: int, value) -> bytes:
     if wire_type != 2:
         raise JellyError(f"expected a length-delimited field, got wire type {wire_type}")
     return bytes(value)
+
+
+def field_varint(wire_type: int, value) -> int:
+    """The value of a field the schema declares a varint.
+
+    Raises JellyError for any other wire type: ``int()`` of a
+    length-delimited field would parse its bytes as decimal text.
+    """
+    if wire_type != 0:
+        raise JellyError(f"expected a varint field, got wire type {wire_type}")
+    return value

@@ -656,7 +656,12 @@ def star_components(edges: DataFrame, *, check_invariant: bool = False) -> DataF
     measures at noise level. Enable it wherever the star shape is an
     upstream-construction promise rather than a local algebraic fact
     (the KG pipeline does).
+
+    Self-loops are dropped first, as :func:`connected_components` drops
+    them: a node whose only edge is ``(x, x)`` is absent from the
+    output, and a self-loop never trips the guard.
     """
+    edges = edges.where(F.col("src") != F.col("dst"))
     comp = (
         edges.groupBy("dst")
         .agg(F.min("src").alias("mn"))

@@ -205,10 +205,11 @@ def plan_partitions(
     — ``collect_list`` drops the nulls the ``when`` leaves for small
     repos — so the driver holds at most total/rows_per_stream entries no
     matter how many repos exist (a 10^6-repo corpus collects only its
-    oversized tail). Small repos default to salt count 1 via a broadcast
-    left join + coalesce, which is exactly their ceil() anyway.
+    oversized tail). The mega-repo counts go back as a literal map
+    column, so no Python job or join builds them; small repos miss the
+    map and default to salt count 1, which is exactly their ceil()
+    anyway.
     """
-    spark = triples.sparkSession
     agg = (
         triples.groupBy("repo")
         .agg(F.count(F.lit(1)).alias("repo_rows"))
@@ -225,23 +226,24 @@ def plan_partitions(
     )
     total = int(agg["total"] or 0)
     n_parts = max(config.min_parts, -(-total // config.rows_per_stream))
-    big = agg["big"] or []
+    # a null repo never matched the salt map; a map key cannot be null
+    big = [r for r in agg["big"] or [] if r["repo"] is not None]
+    n_salts = F.lit(1).cast("long")
     if big:
-        salt_map = spark.createDataFrame(
-            [
-                (r["repo"], -(-int(r["repo_rows"]) // config.rows_per_stream))
+        salt_map = F.create_map(
+            *(
+                col
                 for r in big
-            ],
-            "repo: string, n_salts: long",
+                for col in (
+                    F.lit(r["repo"]),
+                    F.lit(-(-int(r["repo_rows"]) // config.rows_per_stream)).cast("long"),
+                )
+            )
         )
-        salted = triples.join(F.broadcast(salt_map), "repo", "left").withColumn(
-            "n_salts", F.coalesce(F.col("n_salts"), F.lit(1).cast("long"))
-        )
-    else:
-        salted = triples.withColumn("n_salts", F.lit(1).cast("long"))
-    salted = salted.withColumn(
-        "salt", F.pmod(F.xxhash64("path"), F.col("n_salts")).cast("int")
-    ).drop("n_salts")
+        n_salts = F.coalesce(F.element_at(salt_map, F.col("repo")), n_salts)
+    salted = triples.withColumn(
+        "salt", F.pmod(F.xxhash64("path"), n_salts).cast("int")
+    )
     flat = salted if pre_flattened else flatten_terms(salted)
     return (
         flat.repartition(n_parts, "repo", "salt")

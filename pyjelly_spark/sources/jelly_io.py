@@ -22,11 +22,11 @@ stream sha256, repo range) — the per-partition lineage that makes the
 job checkpoint-resumable: a rerun skips partitions whose manifest entry
 exists and whose file sha still matches.
 
-Read side: a listing of .jelly files fans out over executors; each file
-decodes independently (streams are self-contained by construction),
-walked frame by frame from an open file, and yields bounded Arrow
-chunks (worker memory is one frame plus one chunk, for multi-GB
-streams too). Every statement carries its ``frame_id``, so grouped streams
+Read side: one listing of .jelly files (paths and sizes) is packed into
+size-balanced read tasks on the driver; each file decodes independently
+(streams are self-contained by construction), walked frame by frame
+from an open file, and yields bounded Arrow chunks (worker memory is
+one frame plus one chunk, for multi-GB streams too). Every statement carries its ``frame_id``, so grouped streams
 are recovered by grouping on (source_file, frame_id) — the distributed
 analogue of ``parse_jelly_grouped`` (one group per frame,
 /root/reference/pyjelly/integrations/generic/parse.py:230-317).
@@ -40,8 +40,10 @@ assumes the driver's filesystem.
 from __future__ import annotations
 
 import hashlib
+import heapq
 import json
 import posixpath
+import re
 from typing import Iterator, List, Optional, Tuple
 
 import pandas as pd
@@ -93,18 +95,13 @@ def _fs_isdir(filesystem, path: str) -> bool:
     return filesystem.get_file_info(path).type == pafs.FileType.Directory
 
 
-def _fs_listdir(
-    filesystem, path: str, recursive: bool = False
-) -> List[str]:
+def _fs_listdir(filesystem, path: str) -> List[str]:
     from pyarrow import fs as pafs
 
     if not _fs_isdir(filesystem, path):
         return []
     return [
-        info.path
-        for info in filesystem.get_file_info(
-            pafs.FileSelector(path, recursive=recursive)
-        )
+        info.path for info in filesystem.get_file_info(pafs.FileSelector(path))
     ]
 
 
@@ -532,24 +529,127 @@ def _term_cols(term: Optional[tuple]) -> Tuple[Optional[str], ...]:
     return (kind, term[1], None, None)
 
 
-def _jelly_files(path: str) -> List[str]:
-    """Expand a path/URI to the list of .jelly member paths (URIs kept)."""
+def _jelly_listing(path: str) -> List[Tuple[str, int]]:
+    """Expand a path/URI to its .jelly members as (path, byte length),
+    URIs kept: one recursive listing gives both, no stat per file."""
+    from pyarrow import fs as pafs
+
     filesystem, base = _fs_for(path)
     prefix = path[: -len(base)] if path.endswith(base) and path != base else ""
-    if _fs_isdir(filesystem, base):
+    info = filesystem.get_file_info(base)
+    if info.type == pafs.FileType.Directory:
         # recursive: a streaming sink lays out batch=<id>/part-*.jelly
         # subdirectories; the batch reader sees the union transparently
         return sorted(
-            prefix + p
-            for p in _fs_listdir(filesystem, base, recursive=True)
-            if p.endswith(".jelly")
+            (prefix + member.path, member.size)
+            for member in filesystem.get_file_info(
+                pafs.FileSelector(base, recursive=True)
+            )
+            if member.type == pafs.FileType.File
+            and member.path.endswith(".jelly")
         )
-    return [path]
+    # a missing path is kept: its task fails on open, as a file read does
+    return [(path, info.size or 0)]
 
 
-def _paths_df(spark: SparkSession, files: List[str]) -> DataFrame:
-    df = spark.createDataFrame([(f,) for f in files], "source_file: string")
-    return df.repartition(max(len(files), 1))
+def _jelly_files(path: str) -> List[str]:
+    """Expand a path/URI to the list of .jelly member paths (URIs kept)."""
+    return [member for member, _size in _jelly_listing(path)]
+
+
+_BYTE_UNITS = {
+    unit: 1 << (10 * power)
+    for power, units in enumerate(
+        (("", "b"), ("k", "kb"), ("m", "mb"), ("g", "gb"), ("t", "tb"), ("p", "pb"))
+    )
+    for unit in units
+}
+
+
+def _conf_bytes(spark: SparkSession, key: str) -> int:
+    """A Spark byte-size conf ("134217728b", "128m", "4MB") in bytes."""
+    value = spark.conf.get(key)
+    match = re.fullmatch(r"\s*(\d+)\s*([a-z]*)\s*", value.lower())
+    if match is None or match.group(2) not in _BYTE_UNITS:
+        raise ValueError(f"{key}={value!r} is not a byte size")
+    return int(match.group(1)) * _BYTE_UNITS[match.group(2)]
+
+
+def _plan_read_tasks(
+    spark: SparkSession, items: List[Tuple[str, int]]
+) -> List[List[str]]:
+    """Pack whole files into size-balanced read tasks, by the split rule
+    of Spark's file sources (``FilePartition.maxSplitBytes``) and its
+    confs: every file costs its length plus ``openCostInBytes``;
+
+        maxSplitBytes = min(maxPartitionBytes,
+                            max(openCostInBytes, total cost / minPartitionNum))
+
+    with ``minPartitionNum`` defaulting to ``defaultParallelism``. The
+    plan has ``min(#files, ceil(total cost / maxSplitBytes))`` tasks and
+    fills them largest file first, each into the least-loaded task. A
+    task decodes its files one after another, never part of one, so it
+    still holds one frame and one Arrow chunk at a time. Returns each
+    task's paths, in listing order.
+    """
+    if not items:
+        return []
+    open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes")
+    max_bytes = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes")
+    min_parts = spark.conf.get("spark.sql.files.minPartitionNum", None)
+    min_parts = int(min_parts or spark.sparkContext.defaultParallelism)
+    total = sum(size + open_cost for _path, size in items)
+    # total / minPartitionNum rounds up (Spark floors it), so tiny files
+    # never spill into a task past minPartitionNum
+    split = max(1, min(max_bytes, max(open_cost, -(-total // min_parts))))
+    # at least one task: an empty file is still read (strict mode rejects it)
+    n_tasks = max(1, min(len(items), -(-total // split)))
+    loads = [(0, task) for task in range(n_tasks)]
+    members: List[List[int]] = [[] for _ in range(n_tasks)]
+    order = sorted(range(len(items)), key=lambda i: -items[i][1])
+    for i in order:
+        load, task = heapq.heappop(loads)
+        members[task].append(i)
+        heapq.heappush(loads, (load + items[i][1] + open_cost, task))
+    return [[items[i][0] for i in sorted(task)] for task in members]
+
+
+def _planned_read(spark: SparkSession, path: str, read_file, schema) -> DataFrame:
+    """The .jelly files under ``path`` as one DataFrame: ``read_file``
+    maps one file to Arrow RecordBatches of ``schema``, and runs in the
+    read tasks :func:`_plan_read_tasks` packs. The task frame is
+    ``spark.range`` with one id per partition, and each task looks its
+    files up by that id in the closure (PySpark broadcasts a large
+    pickled closure once instead of shipping it with every task), so
+    nothing runs in Python and nothing is shuffled before the reads."""
+    from pyjelly_spark.session import ship_package
+
+    ship_package(spark)
+    tasks = _plan_read_tasks(spark, _jelly_listing(path))
+
+    def read_tasks(batches):
+        for batch in batches:
+            for task in batch.column("id").to_pylist():
+                for source in tasks[task]:
+                    yield from read_file(source)
+
+    # mapInArrow: RecordBatches flow straight from the readers' columnar
+    # builders to the JVM; no pandas materialization on the read path
+    return spark.range(len(tasks), numPartitions=max(len(tasks), 1)).mapInArrow(
+        read_tasks, schema=schema
+    )
+
+
+def _rows_batch(rows: List[tuple], schema: StructType):
+    """Row tuples -> one Arrow RecordBatch of ``schema``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(col, field.type) for col, field in zip(zip(*rows), arrow_schema)],
+        schema=arrow_schema,
+    )
 
 
 def _push_term(term, kinds, values, langs, datatypes) -> None:
@@ -707,27 +807,36 @@ def read_jelly(
 ) -> DataFrame:
     """Read .jelly file(s) into a flat statements DataFrame.
 
-    Parallelism = one task per file; each Jelly stream is self-contained
-    so files decode independently across executors. Output carries
-    ``frame_id``: for grouped streams (one graph/dataset per frame) a
-    ``groupBy(source_file, frame_id)`` recovers the groups — the
-    distributed ``parse_jelly_grouped``. GRAPHS brackets are resolved to
-    quads with the bracketing graph term.
+    Parallelism = planned read tasks: each Jelly stream is
+    self-contained, so files decode independently, and the driver packs
+    whole files into size-balanced tasks by the rule of Spark's file
+    sources (``spark.sql.files.maxPartitionBytes``, ``openCostInBytes``,
+    ``minPartitionNum`` or ``defaultParallelism``; see
+    :func:`_plan_read_tasks`). Many small files share a task and so share
+    its fixed Python-worker cost; a large file gets a task to itself.
+    Which task reads a file, and so the row order across files, follows
+    the plan: order by (source_file, frame_id, stmt_idx) when order
+    matters. Output carries ``frame_id``: for grouped streams (one
+    graph/dataset per frame) a ``groupBy(source_file, frame_id)``
+    recovers the groups — the distributed ``parse_jelly_grouped``.
+    GRAPHS brackets are resolved to quads with the bracketing graph term.
 
-    STRAGGLER CONTRACT (one task per file): every read path walks each
-    object frame by frame from an open file (``ioutils.walk_frames``),
-    so a task holds one frame plus one Arrow chunk whatever the object's
-    size; memory never limits the file size a task can read, time does.
-    A single Jelly stream cannot be split: its lookup tables accumulate
-    SEQUENTIALLY across frames, so a mid-file frame can reference
-    entries declared gigabytes earlier (``ioutils.build_frame_index``
-    gives random access to frame BYTES, not to decoder STATE). Files
-    written by this repo are immune: writers bound each stream at
-    ``rows_per_stream`` (default 200k) statements. A FOREIGN multi-GB
-    single-stream file decodes at one core's rate (~165k stmts/s) on
-    any cluster — re-shard it once through ``read_jelly -> write_jelly``
-    and later reads scale with file count. The reference's parsers are
-    single-stream sequential too (parse.py).
+    STRAGGLER CONTRACT (a file is never split): every read path walks
+    each object frame by frame from an open file
+    (``ioutils.walk_frames``), and a task decodes its files one after
+    another, so it holds one frame plus one Arrow chunk whatever the
+    objects' sizes; memory never limits the file size a task can read,
+    time does. A single Jelly stream cannot be split: its lookup tables
+    accumulate SEQUENTIALLY across frames, so a mid-file frame can
+    reference entries declared gigabytes earlier
+    (``ioutils.build_frame_index`` gives random access to frame BYTES,
+    not to decoder STATE). Files written by this repo are immune:
+    writers bound each stream at ``rows_per_stream`` (default 200k)
+    statements. A FOREIGN multi-GB single-stream file decodes at one
+    core's rate (~165k stmts/s) on any cluster — re-shard it once
+    through ``read_jelly -> write_jelly`` and later reads scale with
+    file count. The reference's parsers are single-stream sequential
+    too (parse.py).
 
     ``split_foreign_files=True`` declares CONCATENATION SEMANTICS and
     recovers intra-file parallelism from it: each options-headed frame
@@ -740,13 +849,14 @@ def read_jelly(
     every Jelly implementation; the reference validates-and-continues on
     repeated options rows, parse/decode.py:259-267, which serves the
     OTHER, byte-indistinguishable shape: one stream re-emitting its
-    options — keep this flag off for those). Mechanics: a distributed
-    pre-pass walks only frame HEADS (length prefix plus the first body
-    bytes, enough to see an options row); segments then shuffle across
-    the cluster and each task walks only its own byte range. frame_id
-    stays file-global, stmt_idx restarts per segment — order by
-    (source_file, frame_id, stmt_idx). Single-encoder files collapse to
-    one segment and decode as the default path, plus one head-only walk.
+    options — keep this flag off for those). Mechanics: a pre-pass in
+    the planned read tasks walks only frame HEADS (length prefix plus
+    the first body bytes, enough to see an options row); segments then
+    shuffle across the cluster and each task walks only its own byte
+    range. frame_id stays file-global, stmt_idx restarts per segment —
+    order by (source_file, frame_id, stmt_idx). Single-encoder files
+    collapse to one segment and decode as the default path, plus one
+    head-only walk.
 
     ``logical_type_strict``: None (default, route by physical type
     only), "flat", or "grouped" — the reference's strict gate
@@ -760,71 +870,50 @@ def read_jelly(
         raise ValueError(
             "logical_type_strict must be None, 'flat' or 'grouped'"
         )
-    from pyjelly_spark.session import ship_package
-
-    ship_package(spark)
-    paths_df = _paths_df(spark, _jelly_files(path))
-
     if split_foreign_files:
-        return _read_jelly_split(spark, paths_df, logical_type_strict)
+        return _read_jelly_split(spark, path, logical_type_strict)
+    return _planned_read(
+        spark,
+        path,
+        lambda source: _decode_path(source, logical_type_strict),
+        READ_SCHEMA,
+    )
 
-    def decode_files(batches):
-        for batch in batches:
-            for source in batch.column("source_file").to_pylist():
-                yield from _decode_path(source, logical_type_strict)
 
-    # mapInArrow: RecordBatches flow straight from the decoder's columnar
-    # builders to the JVM; no pandas materialization on the read path
-    return paths_df.mapInArrow(decode_files, schema=READ_SCHEMA)
+_SEGMENT_SCHEMA = StructType(
+    [
+        StructField("source_file", StringType(), False),
+        StructField("seg_start", LongType(), False),
+        StructField("seg_end", LongType(), False),
+        StructField("frame_offset", LongType(), False),
+    ]
+)
 
 
 def _read_jelly_split(
     spark: SparkSession,
-    paths_df: DataFrame,
+    path: str,
     logical_type_strict: Optional[str],
 ) -> DataFrame:
     """Two-stage segment-parallel decode (read_jelly split_foreign_files).
 
-    Stage 1 (one task per file): walk the frame heads and emit one row
-    per cold-state segment. Stage 2 (one task per SEGMENT, after a
-    repartition that spreads a single file's segments over the
+    Stage 1 (the planned read tasks): walk each file's frame heads and
+    emit one row per cold-state segment. Stage 2 (one task per SEGMENT,
+    after a repartition that spreads a single file's segments over the
     cluster): walk the segment's byte range frame by frame with a fresh
     decoder, frame_ids offset to stay file-global.
     """
 
-    def scan_files(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            srcs: List[str] = []
-            seg_starts: List[int] = []
-            seg_ends: List[int] = []
-            frame_offsets: List[int] = []
-            for source in batch.column("source_file").to_pylist():
-                with _fs_open(source) as handle:
-                    segments = read_segments(handle)
-                for start, end, first_frame in segments:
-                    srcs.append(source)
-                    seg_starts.append(start)
-                    seg_ends.append(end)
-                    frame_offsets.append(first_frame)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(srcs, pa.string()),
-                    pa.array(seg_starts, pa.int64()),
-                    pa.array(seg_ends, pa.int64()),
-                    pa.array(frame_offsets, pa.int64()),
-                ],
-                names=["source_file", "seg_start", "seg_end", "frame_offset"],
+    def scan_file(source):
+        with _fs_open(source) as handle:
+            segments = read_segments(handle)
+        if segments:
+            yield _rows_batch(
+                [(source, start, end, first) for start, end, first in segments],
+                _SEGMENT_SCHEMA,
             )
 
-    segments = paths_df.mapInArrow(
-        scan_files,
-        schema=(
-            "source_file string, seg_start long, seg_end long, "
-            "frame_offset long"
-        ),
-    )
+    segments = _planned_read(spark, path, scan_file, _SEGMENT_SCHEMA)
 
     def decode_segments(batches):
         for batch in batches:
@@ -924,31 +1013,23 @@ def read_jelly_frame_meta(spark: SparkSession, path: str) -> DataFrame:
     (/root/reference/pyjelly/integrations/generic/parse.py:186-190) as a
     first-class DataFrame.
     """
-    from pyjelly_spark.session import ship_package
 
-    ship_package(spark)
-    paths_df = _paths_df(spark, _jelly_files(path))
+    def walk(source):
+        rows = []
+        with _fs_open(source) as handle:
+            for frame_id, frame in enumerate(read_frames(handle)):
+                frame_rows, metadata = split_frame(frame)
+                n_rows = len(frame_rows)
+                rows.extend(
+                    (source, frame_id, n_rows, key, metadata[key].decode("latin1"))
+                    for key in sorted(metadata)
+                )
+                if not metadata:
+                    rows.append((source, frame_id, n_rows, None, None))
+        if rows:
+            yield _rows_batch(rows, FRAME_META_SCHEMA)
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            for source in batch["source_file"]:
-                rows = []
-                with _fs_open(source) as handle:
-                    for frame_id, frame in enumerate(read_frames(handle)):
-                        frame_rows, metadata = split_frame(frame)
-                        n_rows = len(frame_rows)
-                        rows.extend(
-                            (source, frame_id, n_rows, key, metadata[key].decode("latin1"))
-                            for key in sorted(metadata)
-                        )
-                        if not metadata:
-                            rows.append((source, frame_id, n_rows, None, None))
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=[f.name for f in FRAME_META_SCHEMA]
-                    )
-
-    return paths_df.mapInPandas(walk, schema=FRAME_META_SCHEMA)
+    return _planned_read(spark, path, walk, FRAME_META_SCHEMA)
 
 
 NAMESPACE_SCHEMA = StructType(
@@ -964,27 +1045,19 @@ def read_jelly_namespaces(spark: SparkSession, path: str) -> DataFrame:
     """Namespace declarations of .jelly file(s) as (source_file, label,
     iri), distributed (protocol v2 rows; reference surfaces these as
     Prefix events, generic/parse.py:132-141)."""
-    from pyjelly_spark.session import ship_package
 
-    ship_package(spark)
-    paths_df = _paths_df(spark, _jelly_files(path))
+    def walk(source):
+        decoder = StreamDecoder()
+        rows = []
+        with _fs_open(source) as handle:
+            for frame in read_frames(handle):
+                for event in decoder.decode_frame(frame):
+                    if event[0] == "namespace":
+                        rows.append((source, event[1], event[2][1]))
+        if rows:
+            yield _rows_batch(rows, NAMESPACE_SCHEMA)
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            for source in batch["source_file"]:
-                decoder = StreamDecoder()
-                rows = []
-                with _fs_open(source) as handle:
-                    for frame in read_frames(handle):
-                        for event in decoder.decode_frame(frame):
-                            if event[0] == "namespace":
-                                rows.append((source, event[1], event[2][1]))
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=[f.name for f in NAMESPACE_SCHEMA]
-                    )
-
-    return paths_df.mapInPandas(walk, schema=NAMESPACE_SCHEMA)
+    return _planned_read(spark, path, walk, NAMESPACE_SCHEMA)
 
 
 def transcode(

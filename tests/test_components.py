@@ -883,6 +883,30 @@ def test_star_components_invariant_guard_refuses_non_star(spark):
         star_components(chain, check_invariant=True).collect()
 
 
+def test_star_components_self_loops_match_iterative(spark):
+    """Self-loops follow connected_components' contract in both
+    star_components forms: they are dropped, so a node whose only edge
+    is (x, x) is absent, and the guard does not mistake a looped hub or
+    spoke for a chain node."""
+    from pyjelly_spark.operators.components import (
+        connected_components,
+        star_components,
+    )
+
+    df = spark.createDataFrame(
+        [("a", "h"), ("b", "h"), ("x", "x"), ("h", "h"), ("a", "a")],
+        "src: string, dst: string",
+    )
+    want = {(r["node"], r["component"]) for r in connected_components(df).collect()}
+    assert want == {("a", "a"), ("b", "a"), ("h", "a")}
+    for checked in (False, True):
+        got = {
+            (r["node"], r["component"])
+            for r in star_components(df, check_invariant=checked).collect()
+        }
+        assert got == want, checked
+
+
 def test_pipeline_structural_cc_matches_iterative(spark, source_files_500):
     """build_triples(structural_cc=True) — the pipeline default — emits
     the exact same triple multiset as the iterative-CC fallback: the

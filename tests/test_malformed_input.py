@@ -7,7 +7,9 @@ valid stream cut at every byte offset, a giant or overlong length
 prefix, a frame whose rows field has the wrong wire type, and a stream
 whose options row is missing. Each goes through the walk
 (``iter_delimited_frames``), the segment scan (``scan_stream_segments``)
-and ``decode_flat``.
+and ``decode_flat``. A last case mutates one row body inside
+well-formed frames, which only the decoder sees: it must decode or
+raise JellyError.
 """
 
 from __future__ import annotations
@@ -127,6 +129,48 @@ def test_options_less_stream(data, preset, frame_rows):
     first = b"".join(len_field(c.FRAME_ROWS, row) for row in rows[1:])
     stream = b"".join(delimit(f) for f in [first] + frames[1:])
     _check(stream, [[]])
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    data=st.data(),
+    preset=_PRESETS,
+    frame_rows=st.sampled_from([1, 3, 250]),
+    mutation=st.sampled_from(["cut", "flip", "replace"]),
+)
+def test_mutated_row_body(data, preset, frame_rows, mutation):
+    """Cut one row short, flip one of its bytes, or replace it with
+    random bytes, inside well-formed frames. A flipped string byte can
+    decode to other terms, so the property is only: the decoder yields
+    events or raises JellyError, never another exception, in bounded
+    memory."""
+    frames = _frames(data, preset, frame_rows)
+    k = data.draw(st.integers(min_value=0, max_value=len(frames) - 1))
+    rows, _meta = split_frame(frames[k])
+    j = data.draw(st.integers(min_value=0, max_value=len(rows) - 1))
+    row = rows[j]
+    if mutation == "cut":
+        row = row[: data.draw(st.integers(min_value=1, max_value=len(row) - 1))]
+    elif mutation == "flip":
+        pos = data.draw(st.integers(min_value=0, max_value=len(row) - 1))
+        bit = data.draw(st.integers(min_value=1, max_value=255))
+        row = row[:pos] + bytes([row[pos] ^ bit]) + row[pos + 1 :]
+    else:
+        row = data.draw(st.binary(min_size=1, max_size=24))
+    rows[j] = row
+    frames[k] = b"".join(len_field(c.FRAME_ROWS, r) for r in rows)
+    stream = b"".join(delimit(f) for f in frames)
+    tracemalloc.start()
+    try:
+        try:
+            for _event in decode_flat(frames_from_bytes(stream)):
+                pass
+        except c.JellyError:
+            pass
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < _PEAK_BOUND
 
 
 def test_file_walk_and_scan_hold_one_frame(tmp_path):
