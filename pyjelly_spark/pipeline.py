@@ -52,13 +52,7 @@ class PipelineConfig:
     preset: jc.TablePreset = field(default_factory=jc.TablePreset)
     link_calls: bool = True
     canonicalize: bool = True
-    # False = let AQE pick the join strategy: the def dictionaries grow
-    # with the corpus (one row per (symbol, repo, pkg)), so a forced
-    # broadcast turns into a driver collect of millions of rows per pass.
-    # AQE still auto-broadcasts them while they fit the threshold.
-    broadcast_dictionary: bool = False
     resume: bool = True
-    min_parts: int = 1
     # True = canonicalization uses the closed-form star CC: the
     # def-collision graph is a disjoint union of stars BY CONSTRUCTION
     # (def_site_iri embeds its symbol, so no def-site node can bridge
@@ -91,11 +85,13 @@ def build_triples(
     union children regress into a Catalyst constraint-rewrite failure
     (Union.rewriteConstraints key-not-found) once the salt-map join is
     layered on top; persisted branches keep their logical plans so
-    constraint propagation stays consistent. Pinned frames are appended
-    to ``pins`` so the caller can unpersist after its last action. The
-    staged (``resume=True``) path leaves them unpinned: there the whole
+    constraint propagation stays consistent. The staged
+    (``resume=True``) path leaves the branches unpinned: there the whole
     plan executes exactly once inside the stage-write job and the
-    parquet stage is the reuse point.
+    parquet stage is the reuse point. Every pin — the compact frame's
+    checkpoint in both shapes, the branches under ``pin_joins`` — is
+    appended to ``pins`` so the caller can release it after its last
+    action.
     """
     compact = X.extract_compact(files)
     if config.link_calls or config.canonicalize:
@@ -109,14 +105,14 @@ def build_triples(
         # UnsafeRow blocks, while persist builds a compressed columnar
         # cache whose build+decode cost ~+18 s per job at the
         # 4-executor level (measured: histogram 19.1→29.7 s, encode
-        # 30.3→38.8 s). Under pin_joins the frame joins the caller's
-        # release list — un-freed checkpoint blocks accumulated ~GBs
+        # 30.3→38.8 s). The frame joins the caller's release list —
+        # un-freed checkpoint blocks accumulated ~GBs
         # per run in executor storage across repeated fused runs in one
         # long-lived session (monotonically degrading rep walls,
         # 50→114 s over five reps); _release_pin frees them through the
         # materialized LogicalRDD once the caller's last action is done.
         compact = compact.localCheckpoint(eager=False)
-        if pin_joins and pins is not None:
+        if pins is not None:
             pins.append(compact)
     triples = X.triples_from_compact(compact)
 
@@ -130,9 +126,11 @@ def build_triples(
         calls = compact.select(
             "repo", "path", F.explode("calls").alias("symbol")
         )
-        linked = link_mentions(
-            calls, defs, broadcast_dictionary=config.broadcast_dictionary
-        )
+        # no forced broadcast: the def dictionaries grow with the corpus
+        # (one row per (symbol, repo, pkg)), so it would turn into a
+        # driver collect of millions of rows per pass; AQE still
+        # auto-broadcasts them while they fit the threshold
+        linked = link_mentions(calls, defs)
         resolved = resolved_call_triples(linked)
         if pin_joins:
             resolved = resolved.persist()
@@ -225,7 +223,7 @@ def plan_partitions(
         .collect()[0]
     )
     total = int(agg["total"] or 0)
-    n_parts = max(config.min_parts, -(-total // config.rows_per_stream))
+    n_parts = max(1, -(-total // config.rows_per_stream))
     # a null repo never matched the salt map; a map key cannot be null
     big = [r for r in agg["big"] or [] if r["repo"] is not None]
     n_salts = F.lit(1).cast("long")
@@ -319,101 +317,101 @@ def run_pipeline(
     import os
     import shutil
 
-    if not config.resume:
+    stage_dir = os.path.join(config.out_dir, "_stage_triples")
+    if not config.resume and os.path.isdir(config.out_dir):
         # Fused path. Clear stale outputs AND any stale staged-run
         # artifacts (a previous resume=True run's stage/meta would
         # otherwise sit next to streams they no longer describe).
-        stage_dir = os.path.join(config.out_dir, "_stage_triples")
-        if os.path.isdir(config.out_dir):
-            _wipe_jelly_outputs(config.out_dir)
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            for name in ("_stage_meta.json", "_out_meta.json"):
-                try:
-                    os.remove(os.path.join(config.out_dir, name))
-                except FileNotFoundError:
-                    pass
-        pins: list = []
-        triples = build_triples(spark, files, config, pin_joins=True, pins=pins)
-        try:
-            planned = plan_partitions(triples, config)
-            options = jc.StreamOptions(
-                frame_rows=config.frame_rows, preset=config.preset
+        _wipe_jelly_outputs(config.out_dir)
+        shutil.rmtree(stage_dir, ignore_errors=True)
+        for name in ("_stage_meta.json", "_out_meta.json"):
+            try:
+                os.remove(os.path.join(config.out_dir, name))
+            except FileNotFoundError:
+                pass
+    pins: list = []
+    triples = build_triples(
+        spark, files, config, pin_joins=not config.resume, pins=pins
+    )
+    try:
+        if config.resume:
+            marker = os.path.join(stage_dir, "_SUCCESS")
+            stage_meta_path = os.path.join(config.out_dir, "_stage_meta.json")
+            out_meta_path = os.path.join(config.out_dir, "_out_meta.json")
+            # Two-level resume guard:
+            # - stage_meta fingerprints what the STAGED TRIPLES depend on:
+            #   an input content digest (count + min/max/xor of xxhash64
+            #   over repo/path/commit/lang — one aggregate job, catches
+            #   content changes that keep the row count) plus the
+            #   stage-shaping knobs;
+            # - out_meta fingerprints what the JELLY BYTES additionally
+            #   depend on (partitioning + framing + lookup presets), so
+            #   changing e.g. frame_rows invalidates the streams without
+            #   rebuilding extraction.
+            digest = (
+                files.select(
+                    F.xxhash64("repo", "path", "commit", "lang").alias("h")
+                )
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.min("h").alias("mn"),
+                    F.max("h").alias("mx"),
+                    F.expr("bit_xor(h)").alias("xo"),
+                )
+                .collect()[0]
             )
-            return write_jelly(planned, config.out_dir, options, resume=False)
-        finally:
-            # the next job in this session must not find the executors'
-            # storage still holding this run's dead blocks
-            for pinned in pins:
-                _release_pin(pinned)
+            input_digest = ":".join(str(digest[k]) for k in ("n", "mn", "mx", "xo"))
+            stage_meta = {
+                "input_digest": input_digest,
+                "link_calls": config.link_calls,
+                "canonicalize": config.canonicalize,
+            }
+            out_meta = {
+                "rows_per_stream": config.rows_per_stream,
+                "frame_rows": config.frame_rows,
+                "preset": [
+                    config.preset.names,
+                    config.preset.prefixes,
+                    config.preset.datatypes,
+                ],
+            }
+            if not (
+                os.path.exists(marker) and _meta_matches(stage_meta_path, stage_meta)
+            ):
+                _wipe_jelly_outputs(config.out_dir)
+                flatten_terms(triples).write.mode("overwrite").option(
+                    "compression", "zstd"
+                ).parquet(stage_dir)
+                os.makedirs(config.out_dir, exist_ok=True)
+                with open(stage_meta_path, "w") as handle:
+                    json.dump(stage_meta, handle)
+                with open(out_meta_path, "w") as handle:
+                    json.dump(out_meta, handle)
+            elif not _meta_matches(out_meta_path, out_meta):
+                _wipe_jelly_outputs(config.out_dir)
+                with open(out_meta_path, "w") as handle:
+                    json.dump(out_meta, handle)
+            flat = spark.read.parquet(stage_dir)
+            planned = plan_partitions(flat, config, pre_flattened=True)
+        else:
+            planned = plan_partitions(triples, config)
+        options = jc.StreamOptions(frame_rows=config.frame_rows, preset=config.preset)
+        return write_jelly(planned, config.out_dir, options, resume=config.resume)
+    finally:
+        # the next job in this session must not find the executors'
+        # storage still holding this run's dead blocks
+        for pinned in pins:
+            _release_pin(pinned)
 
-    triples = build_triples(spark, files, config)
-    stage_dir = os.path.join(config.out_dir, "_stage_triples")
-    marker = os.path.join(stage_dir, "_SUCCESS")
-    stage_meta_path = os.path.join(config.out_dir, "_stage_meta.json")
-    out_meta_path = os.path.join(config.out_dir, "_out_meta.json")
-    # Two-level resume guard:
-    # - stage_meta fingerprints what the STAGED TRIPLES depend on: an
-    #   input content digest (count + min/max/xor of xxhash64 over
-    #   repo/path/commit/lang — one aggregate job, catches content
-    #   changes that keep the row count) plus the stage-shaping knobs;
-    # - out_meta fingerprints what the JELLY BYTES additionally depend on
-    #   (partitioning + framing + lookup presets), so changing e.g.
-    #   frame_rows invalidates the streams without rebuilding extraction.
-    digest = (
-        files.select(
-            F.xxhash64("repo", "path", "commit", "lang").alias("h")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("h").alias("mn"),
-            F.max("h").alias("mx"),
-            F.expr("bit_xor(h)").alias("xo"),
-        )
-        .collect()[0]
-    )
-    stage_meta = {
-        "input_digest": f"{digest['n']}:{digest['mn']}:{digest['mx']}:{digest['xo']}",
-        "link_calls": config.link_calls,
-        "canonicalize": config.canonicalize,
-    }
-    out_meta = {
-        "rows_per_stream": config.rows_per_stream,
-        "frame_rows": config.frame_rows,
-        "preset": [
-            config.preset.names,
-            config.preset.prefixes,
-            config.preset.datatypes,
-        ],
-        "min_parts": config.min_parts,
-    }
 
-    def _meta_matches(path: str, expected: dict) -> bool:
-        if not os.path.exists(path):
-            return False
-        with open(path) as handle:
-            return json.load(handle) == expected
+def _meta_matches(path: str, expected: dict) -> bool:
+    import json
+    import os
 
-    stage_ok = os.path.exists(marker) and _meta_matches(
-        stage_meta_path, stage_meta
-    )
-    if not stage_ok:
-        _wipe_jelly_outputs(config.out_dir)
-        flatten_terms(triples).write.mode("overwrite").option(
-            "compression", "zstd"
-        ).parquet(stage_dir)
-        os.makedirs(config.out_dir, exist_ok=True)
-        with open(stage_meta_path, "w") as handle:
-            json.dump(stage_meta, handle)
-        with open(out_meta_path, "w") as handle:
-            json.dump(out_meta, handle)
-    elif not _meta_matches(out_meta_path, out_meta):
-        _wipe_jelly_outputs(config.out_dir)
-        with open(out_meta_path, "w") as handle:
-            json.dump(out_meta, handle)
-    flat = spark.read.parquet(stage_dir)
-    planned = plan_partitions(flat, config, pre_flattened=True)
-    options = jc.StreamOptions(frame_rows=config.frame_rows, preset=config.preset)
-    return write_jelly(planned, config.out_dir, options, resume=True)
+    if not os.path.exists(path):
+        return False
+    with open(path) as handle:
+        return json.load(handle) == expected
 
 
 def verify_lineage(

@@ -12,13 +12,15 @@ as an rdflib parser/serializer plugin) — re-expressed as a Spark DSv2
 source so the format composes with the whole DataFrame API: predicate
 pushdown happens after the scan, partition parallelism is one task per
 .jelly file (each stream is self-contained), and writes produce one part
-file per input partition with a commit manifest.
+file per non-empty partition with a commit manifest.
 
 Read schema = the canonical flat statements schema of
 :mod:`pyjelly_spark.sources.jelly_io` (source_file, frame_id, stmt_idx,
 then kind/value/lang/datatype per s/p/o/g slot). The reader yields Arrow
 RecordBatches in bounded chunks, so multi-GB streams decode with bounded
-worker memory; the writer consumes Arrow batches (DataSourceArrowWriter).
+worker memory; the writer consumes Arrow batches (DataSourceArrowWriter)
+through :func:`pyjelly_spark.sources.jelly_io.write_partition`, the same
+encode loop as ``write_jelly``.
 
 Options (write): ``frame_rows``, ``names``/``prefixes``/``datatypes``
 (lookup capacities), ``physical`` in {triples, quads, graphs},
@@ -33,7 +35,7 @@ import os
 import posixpath
 import uuid
 from dataclasses import dataclass
-from typing import Iterator, List, Optional, Sequence
+from typing import List, Optional, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -290,90 +292,38 @@ class JellyStreamReader(DataSourceStreamReader):
 
 @dataclass
 class JellyCommit(WriterCommitMessage):
-    file: str
+    file: Optional[str]  # None: an empty partition wrote no file
     n_statements: int
 
 
-def _encode_part(
-    options: dict, out_dir: str, grouped: bool, iterator, name_prefix: str
-) -> JellyCommit:
+def _check_options(options, schema: StructType) -> None:
+    """The sink checks every Jelly writer makes (``jelly_io._check_sink``),
+    on the driver, before any task runs."""
+    _ensure_package()
+    from pyjelly_spark.sources.jelly_io import _check_sink
+
+    _check_sink(
+        _options_from(options),
+        _bool(options.get("grouped_by_graph"), False),
+        schema.fieldNames(),
+    )
+
+
+def _write_part(options, out_dir: str, iterator, name_prefix: str) -> JellyCommit:
     """Encode one task's Arrow batches into one .jelly part file."""
     _ensure_package()
-    from pyjelly_spark.jelly import constants as jc
-    from pyjelly_spark.jelly.encoder import StreamEncoder, delimit
-    from pyjelly_spark.sources.jelly_io import _fs_for, _terms_from_arrays
+    from pyjelly_spark.sources.jelly_io import write_partition
 
-    opts = _options_from(options)
-    phys = opts.physical_type
-    encoder = StreamEncoder(opts)
-    filesystem, base = _fs_for(out_dir)
-    filesystem.create_dir(base, recursive=True)
-    name = f"{name_prefix}-{uuid.uuid4().hex[:12]}.jelly"
-    target = posixpath.join(base, name)
-    n_statements = 0
-    open_graph: Optional[tuple] = None
-
-    with filesystem.open_output_stream(target) as out:
-
-        def emit(frame: Optional[bytes]) -> None:
-            if frame:
-                out.write(delimit(frame) if opts.delimited else frame)
-
-        def close_group() -> None:
-            nonlocal open_graph
-            if open_graph is not None and phys == jc.PHYSICAL_GRAPHS:
-                encoder.end_graph()
-            if open_graph is not None:
-                emit(encoder.take_frame())
-            open_graph = None
-
-        for batch in iterator:
-            cols = set(batch.schema.names)
-            missing = {"s_kind", "p_kind", "o_kind"} - cols
-            if missing:
-                raise ValueError(
-                    f"jelly write needs flat statement columns; missing {missing}"
-                )
-
-            def col(name: str):  # Arrow -> python strings, no pandas hop
-                return batch.column(name).to_pylist()
-
-            subjects = _terms_from_arrays(
-                col("s_kind"), col("s_value"), col("s_lang"), col("s_datatype")
-            )
-            predicates = _terms_from_arrays(
-                col("p_kind"), col("p_value"), col("p_lang"), col("p_datatype")
-            )
-            objects = _terms_from_arrays(
-                col("o_kind"), col("o_value"), col("o_lang"), col("o_datatype")
-            )
-            graphs: Optional[List[tuple]] = None
-            if "g_kind" in cols and (grouped or phys != jc.PHYSICAL_TRIPLES):
-                kinds = [k if k is not None else "dg" for k in col("g_kind")]
-                graphs = _terms_from_arrays(
-                    kinds, col("g_value"), col("g_lang"), col("g_datatype")
-                )
-            if grouped and graphs is not None:
-                for s, p, o, g in zip(subjects, predicates, objects, graphs):
-                    if g != open_graph:
-                        close_group()
-                        if phys == jc.PHYSICAL_GRAPHS:
-                            encoder.begin_graph(g)
-                        open_graph = g
-                    if phys == jc.PHYSICAL_QUADS:
-                        encoder.add_quad(s, p, o, g)
-                    else:
-                        encoder.add_triple(s, p, o)
-            elif phys == jc.PHYSICAL_QUADS and graphs is not None:
-                for s, p, o, g in zip(subjects, predicates, objects, graphs):
-                    emit(encoder.add_quad(s, p, o, g))
-            else:
-                for s, p, o in zip(subjects, predicates, objects):
-                    emit(encoder.add_triple(s, p, o))
-            n_statements += len(subjects)
-        close_group()
-        emit(encoder.take_frame())
-    return JellyCommit(file=target, n_statements=n_statements)
+    counters = write_partition(
+        iterator,
+        _options_from(options),
+        out_dir,
+        f"{name_prefix}-{uuid.uuid4().hex[:12]}.jelly",
+        _bool(options.get("grouped_by_graph"), False),
+    )
+    if counters is None:
+        return JellyCommit(file=None, n_statements=0)
+    return JellyCommit(file=counters["file"], n_statements=counters["n_statements"])
 
 
 def _write_manifest(out_dir: str, messages, manifest_name: str) -> None:
@@ -388,7 +338,7 @@ def _write_manifest(out_dir: str, messages, manifest_name: str) -> None:
     entries = [
         {"file": m.file, "n_statements": m.n_statements}
         for m in messages
-        if m is not None
+        if m is not None and m.file is not None
     ]
     _fs_write(
         filesystem,
@@ -397,17 +347,30 @@ def _write_manifest(out_dir: str, messages, manifest_name: str) -> None:
     )
 
 
-class JellyWriter(DataSourceArrowWriter):
-    """One .jelly part file per input partition + a _manifest entry."""
+def _delete_parts(out_dir: str, messages) -> None:
+    _ensure_package()
+    from pyjelly_spark.sources.jelly_io import _fs_for
 
-    def __init__(self, options, overwrite: bool) -> None:
+    filesystem, _base = _fs_for(out_dir)
+    for m in messages:
+        if m is not None and m.file is not None:
+            try:
+                filesystem.delete_file(m.file)
+            except OSError:
+                pass
+
+
+class JellyWriter(DataSourceArrowWriter):
+    """One .jelly part file per non-empty input partition + a _manifest
+    entry."""
+
+    def __init__(self, options, overwrite: bool, schema: StructType) -> None:
         self._out = options.get("path")
         if not self._out:
             raise ValueError("jelly datasource requires a path: .save(<path>)")
         self._options = dict(options)
-        self._grouped = _bool(options.get("grouped_by_graph"), False)
+        _check_options(options, schema)
         if overwrite:
-            _ensure_package()
             from pyjelly_spark.sources.jelly_io import _fs_for, _fs_isdir
 
             filesystem, base = _fs_for(self._out)
@@ -415,28 +378,18 @@ class JellyWriter(DataSourceArrowWriter):
                 filesystem.delete_dir_contents(base)
 
     def write(self, iterator) -> JellyCommit:
-        return _encode_part(
-            self._options, self._out, self._grouped, iterator, "part"
-        )
+        return _write_part(self._options, self._out, iterator, "part")
 
     def commit(self, messages) -> None:
         _write_manifest(self._out, messages, "datasource.json")
 
     def abort(self, messages) -> None:
-        _ensure_package()
-        from pyjelly_spark.sources.jelly_io import _fs_for
-
-        filesystem, _base = _fs_for(self._out)
-        for m in messages:
-            if m is not None:
-                try:
-                    filesystem.delete_file(m.file)
-                except OSError:
-                    pass
+        _delete_parts(self._out, messages)
 
 
 class JellyStreamWriter(DataSourceStreamArrowWriter):
-    """Streaming jelly sink: one part file per microbatch partition.
+    """Streaming jelly sink: one part file per non-empty microbatch
+    partition.
 
     Each microbatch commits a ``_manifest/batch-<id>.json``; part files
     are named ``stream-<uuid>.jelly`` so a crashed, retried batch never
@@ -446,32 +399,21 @@ class JellyStreamWriter(DataSourceStreamArrowWriter):
     it grows.
     """
 
-    def __init__(self, options) -> None:
+    def __init__(self, options, schema: StructType) -> None:
         self._out = options.get("path")
         if not self._out:
             raise ValueError("jelly datasource requires a path")
         self._options = dict(options)
-        self._grouped = _bool(options.get("grouped_by_graph"), False)
+        _check_options(options, schema)
 
     def write(self, iterator) -> JellyCommit:
-        return _encode_part(
-            self._options, self._out, self._grouped, iterator, "stream"
-        )
+        return _write_part(self._options, self._out, iterator, "stream")
 
     def commit(self, messages, batchId: int) -> None:
         _write_manifest(self._out, messages, f"batch-{batchId}.json")
 
     def abort(self, messages, batchId: int) -> None:
-        _ensure_package()
-        from pyjelly_spark.sources.jelly_io import _fs_for
-
-        filesystem, _base = _fs_for(self._out)
-        for m in messages:
-            if m is not None:
-                try:
-                    filesystem.delete_file(m.file)
-                except OSError:
-                    pass
+        _delete_parts(self._out, messages)
 
 
 class JellyDataSource(DataSource):
@@ -492,10 +434,10 @@ class JellyDataSource(DataSource):
         return JellyStreamReader(self.options)
 
     def writer(self, schema: StructType, overwrite: bool) -> JellyWriter:
-        return JellyWriter(self.options, overwrite)
+        return JellyWriter(self.options, overwrite, schema)
 
     def streamWriter(self, schema: StructType, overwrite: bool):
-        return JellyStreamWriter(self.options)
+        return JellyStreamWriter(self.options, schema)
 
 
 class JellyDataSourcePushdown(JellyDataSource):

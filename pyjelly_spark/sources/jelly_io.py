@@ -4,9 +4,11 @@ Write side: one Spark partition == one independent Jelly stream (its own
 options row + lookup tables), mirroring one pyjelly ``Stream`` instance
 per output (/root/reference/pyjelly/serialize/streams.py:48-67). The
 encoder is inherently sequential per stream, so it lives inside a single
-``mapInPandas`` pass — the sanctioned escape hatch — while everything
+``mapInArrow`` pass — the sanctioned escape hatch — while everything
 upstream stays declarative. Frames are written incrementally (constant
-memory per partition, like the reference's bounded flows).
+memory per partition, like the reference's bounded flows). One function,
+:func:`write_partition`, encodes a partition's Arrow batches for every
+sink: :func:`write_jelly` and the ``jelly`` data source's writers.
 
 Two framing modes:
 - flat (default): bounded frames of ``frame_rows`` stream rows;
@@ -44,7 +46,7 @@ import heapq
 import json
 import posixpath
 import re
-from typing import Iterator, List, Optional, Tuple
+from typing import Dict, Iterator, List, Optional, Sequence, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -144,7 +146,8 @@ def flatten_terms(df: DataFrame, slots: Tuple[str, ...] = ("s", "p", "o")) -> Da
 
 
 def _terms_from_arrays(kinds, values, langs, datatypes) -> List[tuple]:
-    """Vector-ish tuple construction for one slot of one Arrow batch.
+    """Vector-ish tuple construction for one slot of one Arrow batch
+    (object ndarrays, nulls as None).
 
     RDF-star convention: kind ``qt`` carries the quoted triple as its
     N-Triples serialization (``<< <s> <p> <o> >>``, nesting allowed) in
@@ -155,15 +158,11 @@ def _terms_from_arrays(kinds, values, langs, datatypes) -> List[tuple]:
     # Homogeneous-slot fast paths: predicates are always IRIs and
     # subjects almost always are, so one vectorized kind check replaces
     # the per-row branch ladder for most batches.
-    def _uniform(kind: str) -> bool:
-        eq = kinds == kind  # ndarray (Arrow batches) or scalar (lists)
-        return eq.all() if hasattr(eq, "all") else all(k == kind for k in kinds)
-
     if len(kinds):
         first = kinds[0]
-        if first == "iri" and _uniform("iri"):
+        if first == "iri" and (kinds == "iri").all():
             return [("iri", v) for v in values]
-        if first == "lit" and _uniform("lit"):
+        if first == "lit" and (kinds == "lit").all():
             return [
                 ("lit", v, lg or "", dt or "")
                 for v, lg, dt in zip(values, langs, datatypes)
@@ -217,36 +216,6 @@ def _completed_partition_ids(out_dir: str) -> set:
     return done
 
 
-def _options_to_dict(options: jc.StreamOptions) -> dict:
-    return {
-        "physical_type": options.physical_type,
-        "logical_type": options.logical_type,
-        "names": options.preset.names,
-        "prefixes": options.preset.prefixes,
-        "datatypes": options.preset.datatypes,
-        "frame_rows": options.frame_rows,
-        "stream_name": options.stream_name,
-        "generalized": options.generalized,
-        "rdf_star": options.rdf_star,
-        "namespace_declarations": options.namespace_declarations,
-        "delimited": options.delimited,
-    }
-
-
-def _options_from_dict(d: dict) -> jc.StreamOptions:
-    return jc.StreamOptions(
-        physical_type=d["physical_type"],
-        logical_type=d["logical_type"],
-        preset=jc.TablePreset(d["names"], d["prefixes"], d["datatypes"]),
-        frame_rows=d["frame_rows"],
-        stream_name=d["stream_name"],
-        generalized=d["generalized"],
-        rdf_star=d["rdf_star"],
-        namespace_declarations=d["namespace_declarations"],
-        delimited=d["delimited"],
-    )
-
-
 def guess_options(
     flat_statements: DataFrame, grouped_by_graph: bool = False
 ) -> jc.StreamOptions:
@@ -271,7 +240,176 @@ def guess_options(
     return jc.StreamOptions()
 
 
-_NO_GRAPH = ("\x00no-graph",)  # sentinel distinct from any real term
+def _check_sink(
+    options: jc.StreamOptions, grouped_by_graph: bool, columns
+) -> None:
+    """The checks every Jelly sink makes before a task runs: the flat
+    term columns :func:`write_partition` reads are present (``g_*`` too
+    for quads and grouped framing), and grouped framing has a grouped
+    logical type and delimited frames."""
+    slots = ["s", "p", "o"]
+    if grouped_by_graph or options.physical_type == jc.PHYSICAL_QUADS:
+        slots.append("g")
+    missing = [
+        f"{slot}_{part}"
+        for slot in slots
+        for part in _TERM_COLS
+        if f"{slot}_{part}" not in columns
+    ]
+    if missing:
+        raise jc.JellyError(f"jelly write needs flat term columns; missing {missing}")
+    if not grouped_by_graph:
+        return
+    if not options.delimited:
+        raise jc.JellyError(
+            "non-delimited streams hold exactly ONE frame "
+            "(the reference's pyjelly/serialize/flows.py ManualFrameFlow); "
+            "grouped_by_graph emits one frame per graph"
+        )
+    if options.logical_type % 10 in (
+        jc.LOGICAL_UNSPECIFIED, jc.LOGICAL_FLAT_TRIPLES, jc.LOGICAL_FLAT_QUADS
+    ):
+        raise jc.JellyError(
+            "grouped_by_graph needs a grouped logical type (GRAPHS/DATASETS "
+            "family) — flat logical types use bounded framing, which would "
+            "split graphs across frames"
+        )
+
+
+def write_partition(
+    batches: Iterator,
+    options: jc.StreamOptions,
+    out_dir: str,
+    name: str,
+    grouped_by_graph: bool = False,
+    namespaces: Sequence[Tuple[str, str]] = (),
+    tail_metadata: Optional[Dict[str, bytes]] = None,
+) -> Optional[dict]:
+    """Encode one partition's Arrow RecordBatches of flat statements
+    into the Jelly stream ``out_dir/name`` — the one encode loop behind
+    every sink (:func:`write_jelly` and the ``jelly`` data source).
+
+    The stream is written as ``name + ".inprogress"`` and renamed once
+    complete, so readers (which list ``*.jelly`` only) never see a torn
+    file. An empty partition writes no file and returns None; otherwise
+    the manifest counters come back: file, n_statements, n_frames,
+    n_bytes, stream_sha256, repo_min, repo_max. ``namespaces`` (label,
+    IRI) are declared at the head of the stream and ``tail_metadata``
+    rides on its last frame. Callers run :func:`_check_sink` first.
+
+    ``grouped_by_graph`` emits one frame per consecutive same-graph run
+    (the distributed ``split_to_graphs``): physical GRAPHS brackets each
+    run with graph_start/end rows, physical QUADS re-attaches the graph
+    term per statement, physical TRIPLES drops it (logical grouping
+    only).
+    """
+    import pyarrow.compute as pc
+
+    filesystem, base = _fs_for(out_dir)
+    path = posixpath.join(base, name)
+    tmp_path = path + ".inprogress"
+    encoder = StreamEncoder(options)
+    phys = options.physical_type
+    delimited = options.delimited
+    needs_graph = grouped_by_graph or phys == jc.PHYSICAL_QUADS
+    add_triple = encoder.add_triple
+    add_quad = encoder.add_quad
+    digest = hashlib.sha256()
+    n_statements = n_frames = n_bytes = 0
+    repo_min = repo_max = None
+    open_graph: Optional[tuple] = None  # terms are tuples: None is no graph
+
+    def slot_terms(batch, slot: str) -> List[tuple]:
+        return _terms_from_arrays(
+            *(
+                batch.column(f"{slot}_{part}").to_numpy(zero_copy_only=False)
+                for part in _TERM_COLS
+            )
+        )
+
+    def emit(frame: bytes) -> None:
+        nonlocal n_frames, n_bytes
+        chunk = delimit(frame) if delimited else frame
+        if not delimited and n_frames:
+            raise jc.JellyError(
+                "non-delimited partition stream produced a second "
+                "frame — statements exceed one frame's worth"
+            )
+        sink.write(chunk)
+        digest.update(chunk)
+        n_frames += 1
+        n_bytes += len(chunk)
+
+    def close_group() -> None:
+        nonlocal open_graph
+        if open_graph is None:
+            return
+        if phys == jc.PHYSICAL_GRAPHS:
+            encoder.end_graph()
+        frame = encoder.take_frame()
+        if frame is not None:
+            emit(frame)
+        open_graph = None
+
+    filesystem.create_dir(base, recursive=True)
+    sink = filesystem.open_output_stream(tmp_path)
+    try:
+        for label, iri in namespaces:
+            encoder.declare_namespace(label, iri)
+        for batch in batches:
+            subjects = slot_terms(batch, "s")
+            predicates = slot_terms(batch, "p")
+            objects = slot_terms(batch, "o")
+            if "repo" in batch.schema.names and batch.num_rows:
+                bounds = pc.min_max(batch.column("repo")).as_py()
+                if bounds["min"] is not None:
+                    lo, hi = bounds["min"], bounds["max"]
+                    repo_min = lo if repo_min is None else min(repo_min, lo)
+                    repo_max = hi if repo_max is None else max(repo_max, hi)
+            if needs_graph:
+                graphs = slot_terms(batch, "g")
+            if grouped_by_graph:
+                for s, p, o, g in zip(subjects, predicates, objects, graphs):
+                    if g != open_graph:
+                        close_group()
+                        if phys == jc.PHYSICAL_GRAPHS:
+                            encoder.begin_graph(g)
+                        open_graph = g
+                    if phys == jc.PHYSICAL_QUADS:
+                        add_quad(s, p, o, g)
+                    else:
+                        add_triple(s, p, o)
+            elif phys == jc.PHYSICAL_QUADS:
+                for s, p, o, g in zip(subjects, predicates, objects, graphs):
+                    frame = add_quad(s, p, o, g)
+                    if frame is not None:
+                        emit(frame)
+            else:
+                for s, p, o in zip(subjects, predicates, objects):
+                    frame = add_triple(s, p, o)
+                    if frame is not None:
+                        emit(frame)
+            n_statements += len(subjects)
+        close_group()
+        if n_statements:
+            tail = encoder.take_frame(metadata=tail_metadata)
+            if tail is not None:
+                emit(tail)
+    finally:
+        sink.close()
+    if n_statements == 0:
+        filesystem.delete_file(tmp_path)
+        return None
+    filesystem.move(tmp_path, path)
+    return {
+        "file": path,
+        "n_statements": n_statements,
+        "n_frames": n_frames,
+        "n_bytes": n_bytes,
+        "stream_sha256": digest.hexdigest(),
+        "repo_min": repo_min,
+        "repo_max": repo_max,
+    }
 
 
 def write_jelly(
@@ -287,12 +425,9 @@ def write_jelly(
     ``flat_statements`` must already carry s_/p_/o_ (and g_ for quads /
     grouped mode) flattened term columns in final statement order per
     partition (the caller owns partitioning — see
-    pipeline.plan_partitions). Returns the manifest as pandas.
-
-    ``grouped_by_graph=True`` emits one frame per consecutive same-graph
-    run (the distributed `split_to_graphs`): physical GRAPHS brackets each
-    run with graph_start/end rows, physical QUADS re-attaches the graph
-    term per statement, physical TRIPLES drops it (logical grouping only).
+    pipeline.plan_partitions). Each non-empty partition becomes
+    ``part-<id>.jelly`` through :func:`write_partition` (see there for
+    ``grouped_by_graph`` framing). Returns the manifest as pandas.
 
     ``namespaces`` (label -> IRI) are declared once at the head of every
     partition stream (protocol v2 rows); requires options with
@@ -314,29 +449,14 @@ def write_jelly(
         raise jc.JellyError(
             "namespaces require options.namespace_declarations=True (v2)"
         )
-    if grouped_by_graph and options.delimited and (
-        options.logical_type % 10
-        in (jc.LOGICAL_UNSPECIFIED, jc.LOGICAL_FLAT_TRIPLES, jc.LOGICAL_FLAT_QUADS)
-    ):
-        raise jc.JellyError(
-            "grouped_by_graph needs a grouped logical type (GRAPHS/DATASETS "
-            "family) — flat logical types use bounded framing, which would "
-            "split graphs across frames"
-        )
-    if not options.delimited and grouped_by_graph:
-        raise jc.JellyError(
-            "non-delimited streams hold exactly ONE frame "
-            "(/root/reference/pyjelly/serialize/flows.py ManualFrameFlow); "
-            "grouped_by_graph emits one frame per graph"
-        )
+    _check_sink(options, grouped_by_graph, flat_statements.columns)
     filesystem, base = _fs_for(out_dir)
-    filesystem.create_dir(base, recursive=True)
     filesystem.create_dir(posixpath.join(base, "_manifest"), recursive=True)
     skip_ids = _completed_partition_ids(out_dir) if resume else set()
-    opts_dict = _options_to_dict(options)
     ns_items = sorted((namespaces or {}).items())
+    fields = MANIFEST_SCHEMA.fieldNames()
 
-    def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def write_task(batches):
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
@@ -344,136 +464,27 @@ def write_jelly(
             for _ in batches:
                 pass
             return
-        stream_options = _options_from_dict(opts_dict)
-        part_fs, part_base = _fs_for(out_dir)
-        encoder = StreamEncoder(stream_options)
-        phys = stream_options.physical_type
-        path = posixpath.join(part_base, f"part-{pid:05d}.jelly")
-        tmp_path = path + ".inprogress"
-        digest = hashlib.sha256()
-        n_statements = n_frames = n_bytes = 0
-        repo_min = repo_max = None
-        open_graph: object = _NO_GRAPH
-        add_triple = encoder.add_triple
-        add_quad = encoder.add_quad
-        sink = part_fs.open_output_stream(tmp_path)
-        try:
-
-            delimited = stream_options.delimited
-
-            def emit(frame: bytes) -> None:
-                nonlocal n_frames, n_bytes
-                chunk = delimit(frame) if delimited else frame
-                if not delimited and n_frames:
-                    raise jc.JellyError(
-                        "non-delimited partition stream produced a second "
-                        "frame — statements exceed one frame's worth"
-                    )
-                sink.write(chunk)
-                digest.update(chunk)
-                n_frames += 1
-                n_bytes += len(chunk)
-
-            def close_group() -> None:
-                nonlocal open_graph
-                if open_graph is _NO_GRAPH:
-                    return
-                if phys == jc.PHYSICAL_GRAPHS:
-                    encoder.end_graph()
-                frame = encoder.take_frame()
-                if frame is not None:
-                    emit(frame)
-                open_graph = _NO_GRAPH
-
-            for label, iri in ns_items:
-                encoder.declare_namespace(label, iri)
-
-            for batch in batches:
-                subjects = _terms_from_arrays(
-                    batch["s_kind"].values,
-                    batch["s_value"].values,
-                    batch["s_lang"].values,
-                    batch["s_datatype"].values,
-                )
-                predicates = _terms_from_arrays(
-                    batch["p_kind"].values,
-                    batch["p_value"].values,
-                    batch["p_lang"].values,
-                    batch["p_datatype"].values,
-                )
-                objects = _terms_from_arrays(
-                    batch["o_kind"].values,
-                    batch["o_value"].values,
-                    batch["o_lang"].values,
-                    batch["o_datatype"].values,
-                )
-                if "repo" in batch.columns and len(batch):
-                    lo = batch["repo"].min()
-                    hi = batch["repo"].max()
-                    repo_min = lo if repo_min is None else min(repo_min, lo)
-                    repo_max = hi if repo_max is None else max(repo_max, hi)
-                needs_graph = grouped_by_graph or phys == jc.PHYSICAL_QUADS
-                if needs_graph:
-                    graphs = _terms_from_arrays(
-                        batch["g_kind"].values,
-                        batch["g_value"].values,
-                        batch["g_lang"].values,
-                        batch["g_datatype"].values,
-                    )
-                if grouped_by_graph:
-                    for s, p, o, g in zip(subjects, predicates, objects, graphs):
-                        if g != open_graph:
-                            close_group()
-                            if phys == jc.PHYSICAL_GRAPHS:
-                                encoder.begin_graph(g)
-                            open_graph = g
-                        if phys == jc.PHYSICAL_QUADS:
-                            add_quad(s, p, o, g)
-                        else:
-                            add_triple(s, p, o)
-                elif phys == jc.PHYSICAL_QUADS:
-                    for s, p, o, g in zip(subjects, predicates, objects, graphs):
-                        frame = add_quad(s, p, o, g)
-                        if frame is not None:
-                            emit(frame)
-                else:
-                    for s, p, o in zip(subjects, predicates, objects):
-                        frame = add_triple(s, p, o)
-                        if frame is not None:
-                            emit(frame)
-                n_statements += len(subjects)
-            close_group()
-            if n_statements:
-                tail = encoder.take_frame(
-                    metadata={"partition": str(pid).encode("ascii")}
-                )
-                if tail is not None:
-                    emit(tail)
-        finally:
-            sink.close()
-        if n_statements == 0:
-            part_fs.delete_file(tmp_path)
+        counters = write_partition(
+            batches,
+            options,
+            out_dir,
+            f"part-{pid:05d}.jelly",
+            grouped_by_graph=grouped_by_graph,
+            namespaces=ns_items,
+            tail_metadata={"partition": str(pid).encode("ascii")},
+        )
+        if counters is None:
             return
-        part_fs.move(tmp_path, path)
-        entry = {
-            "partition_id": pid,
-            "file": path,
-            "n_statements": n_statements,
-            "n_frames": n_frames,
-            "n_bytes": n_bytes,
-            "stream_sha256": digest.hexdigest(),
-            "repo_min": repo_min,
-            "repo_max": repo_max,
-            "skipped": 0,
-        }
+        entry = {"partition_id": pid, **counters, "skipped": 0}
+        part_fs, part_base = _fs_for(out_dir)
         _fs_write(
             part_fs,
             posixpath.join(part_base, "_manifest", f"part-{pid:05d}.json"),
             json.dumps(entry).encode("utf-8"),
         )
-        yield pd.DataFrame([entry])
+        yield _rows_batch([tuple(entry[f] for f in fields)], MANIFEST_SCHEMA)
 
-    manifest_df = flat_statements.mapInPandas(write_partition, schema=MANIFEST_SCHEMA)
+    manifest_df = flat_statements.mapInArrow(write_task, schema=MANIFEST_SCHEMA)
     written = manifest_df.toPandas()
     # merge with previously-completed (skipped) partitions for a full view
     previous = [

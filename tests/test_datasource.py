@@ -1,6 +1,6 @@
 """The ``jelly`` Spark format (Python Data Source API).
 
-The DSv2 surface must agree with the mapInPandas reader/writer
+The DSv2 surface must agree with the mapInArrow reader/writer
 (`sources/jelly_io.py`) — same flat schema, same wire. Reference
 behavior analogue: format registration in
 /root/reference/pyjelly/integrations/rdflib/__init__.py.
@@ -48,7 +48,7 @@ def test_write_read_roundtrip_triples(registered, tmp_path):
     assert back.count() == nt.count()
     # two input partitions -> two part files
     assert back.select("source_file").distinct().count() == 2
-    # byte/value parity with the mapInPandas reader
+    # byte/value parity with the mapInArrow reader
     assert _stmts(back) == _stmts(read_jelly(spark, out))
 
 
@@ -56,7 +56,7 @@ def test_write_read_roundtrip_triples(registered, tmp_path):
 def test_datasource_reader_matches_legacy_on_legacy_output(
     registered, tmp_path
 ):
-    """Format reader over files the mapInPandas writer produced."""
+    """Format reader over files the mapInArrow writer produced."""
     from pyjelly_spark.jelly import constants as jc
     from pyjelly_spark.sources.nt_source import read_nt
 
@@ -356,3 +356,165 @@ def test_register_jelly_pushdown_flag(registered, tmp_path):
     finally:
         register_jelly(spark)  # restore default (re-enables conf)
         assert spark.conf.get(conf_key) == "true"
+
+
+_FLAT_DDL = ", ".join(
+    f"{slot}_{part} string"
+    for slot in "spog"
+    for part in ("kind", "value", "lang", "datatype")
+)
+_SPO_COLS = [
+    f"{slot}_{part}" for slot in "spo" for part in ("kind", "value", "lang", "datatype")
+]
+
+
+def _synthetic_statements(spark, n=60, n_graphs=3):
+    """A flat statements frame in graph-major order: IRIs, language and
+    datatype literals, blank nodes, a default-graph run, and repeated
+    subjects/predicates (so repeated-term suppression is exercised)."""
+    ex = "http://example.org/"
+    rows = []
+    for i in range(n):
+        s = ("iri", f"{ex}s{i % 7}", None, None)
+        p = ("iri", f"{ex}p{i % 3}", None, None)
+        o = [
+            ("lit", f"v{i}", "en", ""),
+            ("lit", str(i), "", "http://www.w3.org/2001/XMLSchema#integer"),
+            ("bnode", f"b{i}", None, None),
+            ("iri", f"{ex}o{i}", None, None),
+        ][i % 4]
+        graph = i * n_graphs // n
+        g = ("iri", f"{ex}g{graph}", None, None) if graph else ("dg", None, None, None)
+        rows.append(s + p + o + g)
+    return spark.createDataFrame(rows, _FLAT_DDL)
+
+
+def _decoded(spark, path):
+    """Decoded statements of one-file output in (frame_id, stmt_idx) order."""
+    df = read_jelly(spark, path)
+    assert df.select("source_file").distinct().count() == 1
+    return [tuple(r)[1:] for r in df.orderBy("frame_id", "stmt_idx").collect()]
+
+
+@pytest.mark.parametrize("mode", ["triples", "quads", "graphs"])
+def test_datasource_writer_matches_write_jelly(registered, tmp_path, mode):
+    """df.write.format("jelly") and write_jelly encode through the same
+    partition writer: the same statements, frames and statement order,
+    in triples, flat quads and grouped GRAPHS modes."""
+    from pyjelly_spark.jelly import constants as jc
+
+    spark = registered
+    stmts = _synthetic_statements(spark)
+    if mode == "triples":
+        stmts = stmts.select(*_SPO_COLS)
+    options = jc.StreamOptions(
+        physical_type={"triples": 1, "quads": 2, "graphs": 3}[mode],
+        logical_type={
+            "triples": jc.LOGICAL_FLAT_TRIPLES,
+            "quads": jc.LOGICAL_FLAT_QUADS,
+            "graphs": jc.LOGICAL_DATASETS,
+        }[mode],
+        frame_rows=16,
+    )
+    grouped = mode == "graphs"
+    ds_out = str(tmp_path / "ds")
+    (
+        stmts.coalesce(1)
+        .write.format("jelly")
+        .option("physical", mode)
+        .option("grouped_by_graph", str(grouped).lower())
+        .option("frame_rows", 16)
+        .mode("append")
+        .save(ds_out)
+    )
+    fn_out = str(tmp_path / "fn")
+    write_jelly(stmts.coalesce(1), fn_out, options, grouped_by_graph=grouped)
+
+    got = _decoded(spark, ds_out)
+    assert got == _decoded(spark, fn_out)
+    frame_ids = [row[0] for row in got]
+    want = [tuple(r) for r in stmts.collect()]
+    if mode == "triples":
+        want = [row + (None,) * 4 for row in want]
+    if grouped:  # one frame per graph run
+        assert frame_ids == [i * 3 // 60 for i in range(60)]
+    else:  # bounded frames of 16 stream rows
+        assert frame_ids == sorted(frame_ids) and frame_ids[-1] >= 3
+    assert [row[2:] for row in got] == want
+
+
+def test_empty_partitions_write_no_file(registered, tmp_path):
+    """A partition with no statements leaves neither a .jelly file nor a
+    manifest entry, in both sinks, and strict flat reads accept the
+    output (a 0-byte stream has no options row)."""
+    import json
+
+    spark = registered
+    stmts = _synthetic_statements(spark, n=3).select(*_SPO_COLS).repartition(8)
+    ds_out = str(tmp_path / "ds")
+    stmts.write.format("jelly").mode("append").save(ds_out)
+    files = sorted(name for name in os.listdir(ds_out) if name.endswith(".jelly"))
+    with open(os.path.join(ds_out, "_manifest", "datasource.json")) as handle:
+        entries = json.load(handle)
+    assert 1 <= len(files) <= 3
+    assert sorted(os.path.basename(e["file"]) for e in entries) == files
+    assert sum(e["n_statements"] for e in entries) == 3
+    assert all(os.path.getsize(os.path.join(ds_out, name)) > 0 for name in files)
+    assert not [name for name in os.listdir(ds_out) if name.endswith(".inprogress")]
+    assert read_jelly(spark, ds_out, logical_type_strict="flat").count() == 3
+
+    fn_out = str(tmp_path / "fn")
+    manifest = write_jelly(stmts, fn_out)
+    files = sorted(name for name in os.listdir(fn_out) if name.endswith(".jelly"))
+    assert 1 <= len(files) <= 3
+    assert sorted(os.path.basename(f) for f in manifest["file"]) == files
+    assert read_jelly(spark, fn_out, logical_type_strict="flat").count() == 3
+
+
+def test_sink_checks_hold_for_every_sink(registered, tmp_path):
+    """Grouped framing needs delimited frames and quads need g_* columns,
+    whichever sink writes: the data source fails before any task runs
+    and leaves no stream behind."""
+    from pyjelly_spark.jelly import constants as jc
+    from pyjelly_spark.jelly.grouped import grouped_options
+
+    spark = registered
+    quads = _synthetic_statements(spark).coalesce(1)
+    triples = quads.select(*_SPO_COLS)
+    ds_out = str(tmp_path / "ds")
+    with pytest.raises(Exception, match="JellyError: non-delimited"):
+        (
+            quads.write.format("jelly")
+            .option("physical", "graphs")
+            .option("grouped_by_graph", "true")
+            .option("delimited", "false")
+            .mode("append")
+            .save(ds_out)
+        )
+    with pytest.raises(Exception, match="JellyError: .*g_kind"):
+        (
+            triples.write.format("jelly")
+            .option("physical", "quads")
+            .mode("append")
+            .save(ds_out)
+        )
+    assert not os.path.exists(ds_out) or not [
+        name for name in os.listdir(ds_out) if name.endswith(".jelly")
+    ]
+    with pytest.raises(jc.JellyError, match="non-delimited"):
+        write_jelly(
+            quads,
+            str(tmp_path / "fn"),
+            grouped_options(jc.PHYSICAL_GRAPHS, delimited=False),
+            grouped_by_graph=True,
+        )
+    with pytest.raises(jc.JellyError, match="g_kind"):
+        write_jelly(
+            triples,
+            str(tmp_path / "fn"),
+            jc.StreamOptions(
+                physical_type=jc.PHYSICAL_QUADS,
+                logical_type=jc.LOGICAL_FLAT_QUADS,
+            ),
+        )
+

@@ -138,6 +138,23 @@ class TestLinking:
         assert (got[0]["def_repo"], got[0]["def_path"]) == ("r2", "w")
 
 
+def test_run_pipeline_releases_its_checkpoints(spark, source_files_500, tmp_path):
+    """A fused run and a cold staged run in one session leave executor
+    storage as they found it: both shapes release the compact frame's
+    localCheckpoint (and the fused shape its join pins) after their last
+    action."""
+
+    def stored_rdds() -> int:
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    before = stored_rdds()
+    for resume in (False, True):
+        out = str(tmp_path / f"resume_{resume}")
+        config = PipelineConfig(out_dir=out, rows_per_stream=2000, resume=resume)
+        assert run_pipeline(spark, source_files_500, config)["n_statements"].sum() > 0
+        assert stored_rdds() == before, f"resume={resume} left storage behind"
+
+
 class TestMaterialization:
     @pytest.fixture(scope="class")
     def run(self, spark, source_files_500, tmp_path_factory):
