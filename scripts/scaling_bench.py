@@ -17,9 +17,11 @@ Two modes:
              round scheduling, codegen) that a long-lived cluster
              amortizes to zero, so measured efficiency understates the
              cluster number; reported with that caveat.
-  encode   — the Jelly-encode stage alone (staged parquet -> salt ->
-             repartition -> sort -> encode workers). Execution-dominated,
-             so it isolates how the DATA PATH scales with cores.
+  encode   — the Jelly-encode stage alone over staged parquet (the
+             compact frame for the salt histogram, the triples for the
+             encode): salt -> repartition -> sort -> encode workers.
+             Execution-dominated, so it isolates how the DATA PATH scales
+             with cores.
 
 Usage: python scripts/scaling_bench.py [n_files] [lo_cpus] [hi_cpus] [mode] [cluster]
        mode in {pipeline, encode, both(default)}
@@ -75,9 +77,10 @@ def bench_dir(prefix):
     return tempfile.mkdtemp(prefix=prefix, dir=BENCH_TMP)
 
 from pyjelly_spark.jelly import constants as jc
+from pyjelly_spark.operators.extract import extract_compact
 from pyjelly_spark.pipeline import PipelineConfig, build_triples, plan_partitions, run_pipeline
 from pyjelly_spark.session import build_session
-from pyjelly_spark.sources.jelly_io import flatten_terms, write_jelly
+from pyjelly_spark.sources.jelly_io import write_jelly
 from pyjelly_spark.sources.source_repos import generate_source_files
 
 if cluster == "executors":
@@ -147,21 +150,23 @@ if mode in ("pipeline", "both"):
     }
 
 if mode in ("encode", "both"):
-    # stage the flat triples once (untimed), then time the encode job:
-    # parquet scan -> salt join -> repartition -> sortWithinPartitions ->
-    # per-partition Jelly encode -> part files + manifest.
+    # stage the compact frame and the triples once (untimed), then time
+    # the encode job: parquet scans -> salt histogram over the compact
+    # frame -> repartition -> sortWithinPartitions -> per-partition Jelly
+    # encode -> part files + manifest.
     cfg = PipelineConfig(out_dir="unused", rows_per_stream=100_000, resume=False)
     stage_dir = bench_dir(f"stage_{cpus}_")
-    flatten_terms(build_triples(spark, files, cfg)).write.mode(
-        "overwrite").parquet(stage_dir)
-    flat = spark.read.parquet(stage_dir)
+    extract_compact(files).write.parquet(os.path.join(stage_dir, "compact"))
+    compact = spark.read.parquet(os.path.join(stage_dir, "compact"))
+    build_triples(compact, cfg).write.parquet(os.path.join(stage_dir, "triples"))
+    triples = spark.read.parquet(os.path.join(stage_dir, "triples"))
     walls = []
     n = 0
     for rep in range(REPS):
         out_dir = bench_dir(f"encode_{cpus}_")
         try:
             t0 = time.time()
-            planned = plan_partitions(flat, cfg, pre_flattened=True)
+            planned = plan_partitions(compact, triples, cfg)
             manifest = write_jelly(planned, out_dir, jc.StreamOptions(),
                                    resume=False)
             walls.append(time.time() - t0)

@@ -908,22 +908,20 @@ def test_star_components_self_loops_match_iterative(spark):
 
 
 def test_pipeline_structural_cc_matches_iterative(spark, source_files_500):
-    """build_triples(structural_cc=True) — the pipeline default — emits
-    the exact same triple multiset as the iterative-CC fallback: the
-    def-collision graph is a disjoint star forest by construction."""
-    from pyjelly_spark.pipeline import PipelineConfig, build_triples
+    """On the pipeline's own def-collision edges, the closed-form star CC
+    the pipeline runs gives the same assignment as the general iterative
+    operator: the graph is a disjoint star forest by construction."""
+    from pyjelly_spark.operators import extract as X
+    from pyjelly_spark.operators.components import (
+        connected_components,
+        star_components,
+    )
+    from pyjelly_spark.pipeline import collision_edges
 
-    a = build_triples(
-        spark,
-        source_files_500,
-        PipelineConfig(out_dir="unused", structural_cc=True),
-    )
-    b = build_triples(
-        spark,
-        source_files_500,
-        PipelineConfig(out_dir="unused", structural_cc=False),
-    )
-    cols = ["repo", "path", "kind_rank", "s", "p", "o"]
-    fa = sorted(map(tuple, a.select(*[F.col(c).cast("string") for c in cols]).collect()))
-    fb = sorted(map(tuple, b.select(*[F.col(c).cast("string") for c in cols]).collect()))
-    assert fa == fb and len(fa) > 0
+    edges = collision_edges(X.extract_compact(source_files_500))
+
+    def assignment(df):
+        return sorted((r["node"], r["component"]) for r in df.collect())
+
+    star = assignment(star_components(edges, check_invariant=True))
+    assert star == assignment(connected_components(edges)) and len(star) > 0

@@ -139,20 +139,40 @@ class TestLinking:
 
 
 def test_run_pipeline_releases_its_checkpoints(spark, source_files_500, tmp_path):
-    """A fused run and a cold staged run in one session leave executor
-    storage as they found it: both shapes release the compact frame's
-    localCheckpoint (and the fused shape its join pins) after their last
-    action."""
+    """A fused run, a cold staged run and a warm staged rerun (the skip
+    path) in one session each leave executor storage as they found it:
+    the fused shape releases the compact frame's localCheckpoint after
+    its last action, and the staged shape pins nothing."""
 
     def stored_rdds() -> int:
         return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
 
     before = stored_rdds()
-    for resume in (False, True):
+    for resume, label in ((False, "fused"), (True, "cold"), (True, "warm")):
         out = str(tmp_path / f"resume_{resume}")
         config = PipelineConfig(out_dir=out, rows_per_stream=2000, resume=resume)
         assert run_pipeline(spark, source_files_500, config)["n_statements"].sum() > 0
-        assert stored_rdds() == before, f"resume={resume} left storage behind"
+        assert stored_rdds() == before, f"{label} run left storage behind"
+
+
+def test_fused_and_resume_write_identical_streams(spark, source_files_500, tmp_path):
+    """Both execution shapes run one plan: on the same input they write
+    byte-identical streams."""
+    shas = [
+        sorted(
+            run_pipeline(
+                spark,
+                source_files_500,
+                PipelineConfig(
+                    out_dir=str(tmp_path / f"resume_{resume}"),
+                    rows_per_stream=2000,
+                    resume=resume,
+                ),
+            )["stream_sha256"]
+        )
+        for resume in (False, True)
+    ]
+    assert shas[0] == shas[1] and len(shas[0]) > 1
 
 
 class TestMaterialization:
@@ -218,7 +238,7 @@ class TestMaterialization:
 class TestCanonicalization:
     def test_shared_symbols_get_canonical(self, spark, source_files_500):
         config = PipelineConfig(out_dir="/tmp/unused", link_calls=False)
-        triples = build_triples(spark, source_files_500, config)
+        triples = build_triples(X.extract_compact(source_files_500), config)
         canon = triples.where(F.col("p.value") == X.P_CANONICAL)
         rows = canon.select(
             F.col("s.value").alias("site"), F.col("o.value").alias("target")
@@ -263,16 +283,16 @@ class TestSourceReaderAndStageGuard:
         out = str(tmp_path / "kg_out")
         cfg = PipelineConfig(out_dir=out, rows_per_stream=10_000, resume=True)
         m1 = run_pipeline(spark, generate_source_files(spark, 200), cfg)
-        stage_mtime = os.path.getmtime(os.path.join(out, "_stage_triples", "_SUCCESS"))
+        stage_mtime = os.path.getmtime(os.path.join(out, "_compact", "_SUCCESS"))
         # same input -> stage reused (mtime unchanged)
         run_pipeline(spark, generate_source_files(spark, 200), cfg)
         assert os.path.getmtime(
-            os.path.join(out, "_stage_triples", "_SUCCESS")
+            os.path.join(out, "_compact", "_SUCCESS")
         ) == stage_mtime
         # different input -> fingerprint mismatch -> stage rebuilt
         m3 = run_pipeline(spark, generate_source_files(spark, 300), cfg)
         assert os.path.getmtime(
-            os.path.join(out, "_stage_triples", "_SUCCESS")
+            os.path.join(out, "_compact", "_SUCCESS")
         ) != stage_mtime
         assert int(m3["n_statements"].sum()) > int(m1["n_statements"].sum())
 
@@ -450,7 +470,7 @@ class TestResumeFingerprint:
         cfg = PipelineConfig(out_dir=out, rows_per_stream=10_000, resume=True)
         base = generate_source_files(spark, 100)
         run_pipeline(spark, base, cfg)
-        marker = os.path.join(out, "_stage_triples", "_SUCCESS")
+        marker = os.path.join(out, "_compact", "_SUCCESS")
         mtime = os.path.getmtime(marker)
         # same rows, one commit value flipped -> digest differs -> rebuild
         edited = base.withColumn(
@@ -462,8 +482,8 @@ class TestResumeFingerprint:
         assert os.path.getmtime(marker) != mtime
 
     def test_frame_rows_change_invalidates_outputs_not_stage(self, spark, tmp_path):
-        """Framing knobs re-encode the streams but reuse the staged
-        triples (two-level fingerprint)."""
+        """Framing knobs re-encode the streams but reuse the compact
+        checkpoint (two-level fingerprint)."""
         import os
 
         from pyjelly_spark.pipeline import PipelineConfig, run_pipeline
@@ -473,7 +493,7 @@ class TestResumeFingerprint:
         base = generate_source_files(spark, 100)
         cfg1 = PipelineConfig(out_dir=out, rows_per_stream=10_000, resume=True)
         m1 = run_pipeline(spark, base, cfg1)
-        marker = os.path.join(out, "_stage_triples", "_SUCCESS")
+        marker = os.path.join(out, "_compact", "_SUCCESS")
         mtime = os.path.getmtime(marker)
         first_file = sorted(
             f for f in os.listdir(out) if f.endswith(".jelly")
@@ -484,7 +504,7 @@ class TestResumeFingerprint:
             out_dir=out, rows_per_stream=10_000, resume=True, frame_rows=7
         )
         m2 = run_pipeline(spark, base, cfg2)
-        # stage untouched, outputs rewritten (nothing skipped) with new framing
+        # checkpoint untouched, outputs rewritten (nothing skipped) with new framing
         assert os.path.getmtime(marker) == mtime
         assert set(m2["skipped"]) == {0}
         bytes2 = open(os.path.join(out, first_file), "rb").read()
@@ -493,45 +513,69 @@ class TestResumeFingerprint:
 
 
 class TestPartitionPlanBounded:
+    """plan_partitions salts each repo by the compact frame's triple bound
+    (file_triple_bound summed per repo), not by a pass over the joined
+    triples."""
+
+    @staticmethod
+    def compact(spark, n_files, repo, n_imports, n_defs):
+        """A synthetic compact frame: file ``id`` of repo ``repo`` has
+        ``n_imports`` imports, ``n_defs`` defs and no calls."""
+        return spark.range(n_files).select(
+            repo.alias("repo"),
+            F.concat(F.lit("p"), F.col("id").cast("string")).alias("path"),
+            F.lit("python").alias("lang"),
+            F.lit("0" * 64).alias("sha"),
+            F.array_repeat(F.lit("m"), n_imports.cast("int")).alias("imports"),
+            F.array_repeat(F.lit("f"), n_defs.cast("int")).alias("defs"),
+            F.array().cast("array<string>").alias("calls"),
+        )
+
     def test_many_small_repos_collect_nothing(self, spark):
         """plan_partitions' driver collect holds only mega-repos: with
-        every repo under rows_per_stream the big list is empty and the
-        plan still covers all rows with salt 0."""
+        every repo's bound under rows_per_stream the big list is empty and
+        the plan still covers all rows with salt 0."""
         from pyjelly_spark.pipeline import PipelineConfig, plan_partitions
-        from pyjelly_spark.operators import extract as X
 
-        files = spark.range(5000).select(
-            F.concat(F.lit("r"), (F.col("id") % 1000).cast("string")).alias("repo"),
-            F.concat(F.lit("p"), F.col("id").cast("string")).alias("path"),
-            F.lit(0).cast("int").alias("kind_rank"),
-            X.iri(F.concat(F.lit("s"), F.col("id").cast("string"))).alias("s"),
-            X.iri(F.lit("p")).alias("p"),
-            X.iri(F.lit("o")).alias("o"),
+        compact = self.compact(
+            spark, 5000, F.concat(F.lit("r"), (F.col("id") % 1000).cast("string")),
+            F.lit(0), F.lit(0),
         )
         cfg = PipelineConfig(out_dir="/tmp/unused", rows_per_stream=100)
-        planned = plan_partitions(files, cfg)
-        assert planned.count() == 5000
-        # 1000 repos x 5 rows, all below the threshold -> every salt is 0
+        planned = plan_partitions(compact, X.triples_from_compact(compact), cfg)
+        assert planned.count() == 5000 * 3
+        # 1000 repos x 5 files x bound 3, all below the threshold -> salt 0
         assert planned.select("salt").distinct().collect() == [
             __import__("pyspark").sql.Row(salt=0)
         ]
 
     def test_mega_repo_fans_out(self, spark):
+        """A mega-repo fans out to ceil(bound / rows_per_stream) salts."""
         from pyjelly_spark.pipeline import PipelineConfig, plan_partitions
-        from pyjelly_spark.operators import extract as X
 
-        files = spark.range(1000).select(
-            F.lit("mega").alias("repo"),
-            F.concat(F.lit("p"), F.col("id").cast("string")).alias("path"),
-            F.lit(0).cast("int").alias("kind_rank"),
-            X.iri(F.concat(F.lit("s"), F.col("id").cast("string"))).alias("s"),
-            X.iri(F.lit("p")).alias("p"),
-            X.iri(F.lit("o")).alias("o"),
-        )
+        compact = self.compact(spark, 1000, F.lit("mega"), F.col("id") % 3, F.lit(1))
         cfg = PipelineConfig(out_dir="/tmp/unused", rows_per_stream=100)
-        planned = plan_partitions(files, cfg)
+        planned = plan_partitions(compact, X.triples_from_compact(compact), cfg)
+        # per file: 3 structural + imports + 2 x one def (the def triple
+        # and its possible canonical triple)
+        bound = sum(3 + i % 3 + 2 for i in range(1000))
         n_salts = planned.select("salt").distinct().count()
-        assert n_salts == 10  # ceil(1000/100) streams for the mega repo
+        assert n_salts == -(-bound // 100) == 60
+
+    def test_bound_covers_every_repo(self, spark, source_files_500):
+        """Soundness: with linking and canonicalization on, each repo's
+        bound is at least its true row count in build_triples."""
+        from pyjelly_spark.pipeline import file_triple_bound
+
+        cfg = PipelineConfig(out_dir="/tmp/unused")
+        compact = X.extract_compact(source_files_500)
+        bound = dict(
+            compact.groupBy("repo").agg(F.sum(file_triple_bound(cfg))).collect()
+        )
+        actual = dict(build_triples(compact, cfg).groupBy("repo").count().collect())
+        assert bound.keys() == actual.keys() and len(actual) > 1
+        short = {r: (bound[r], n) for r, n in actual.items() if bound[r] < n}
+        assert not short, short
 
 
 def test_write_nt_roundtrip(spark, tmp_path):
