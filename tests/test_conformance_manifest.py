@@ -88,7 +88,18 @@ def test_manifest_has_enough_coverage():
 
 
 @pytest.mark.parametrize(
-    "case", POSITIVE, ids=[c["id"] for c in POSITIVE]
+    "case",
+    [
+        pytest.param(
+            c,
+            marks=pytest.mark.skipif(
+                not _resolve(c["action"]).exists(),
+                reason=f"{c['action']} not available",
+            ),
+        )
+        for c in POSITIVE
+    ],
+    ids=[c["id"] for c in POSITIVE],
 )
 def test_positive(case):
     events = _parse(case)

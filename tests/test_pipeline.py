@@ -142,17 +142,26 @@ def test_run_pipeline_releases_its_checkpoints(spark, source_files_500, tmp_path
     """A fused run, a cold staged run and a warm staged rerun (the skip
     path) in one session each leave executor storage as they found it:
     the fused shape releases the compact frame's localCheckpoint after
-    its last action, and the staged shape pins nothing."""
+    its last action, and the staged shape pins nothing.
 
-    def stored_rdds() -> int:
-        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+    It compares the ids of stored RDDs, not their count: RDDs that
+    earlier tests checkpointed and no longer reference are freed by
+    Spark's ContextCleaner after some JVM GC, at a time this test does
+    not control, so a count can fall during the runs without any leak.
+    A run passes when it leaves no stored RDD that was not there before."""
+
+    def stored_rdds() -> set[int]:
+        return {
+            info.id()
+            for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        }
 
     before = stored_rdds()
     for resume, label in ((False, "fused"), (True, "cold"), (True, "warm")):
         out = str(tmp_path / f"resume_{resume}")
         config = PipelineConfig(out_dir=out, rows_per_stream=2000, resume=resume)
         assert run_pipeline(spark, source_files_500, config)["n_statements"].sum() > 0
-        assert stored_rdds() == before, f"{label} run left storage behind"
+        assert stored_rdds() - before == set(), f"{label} run left storage behind"
 
 
 def test_fused_and_resume_write_identical_streams(spark, source_files_500, tmp_path):
@@ -386,6 +395,8 @@ def test_distributed_nt_reader_matches_local(spark):
     from pyjelly_spark.sources.nt_source import read_nt
 
     nt = "/root/reference/tests/e2e_test_cases/triples_rdf_1_1/weather.nt"
+    if not os.path.exists(nt):
+        pytest.skip(f"{nt} not available")
     local = list(read_ntriples(nt))
     dist = read_nt(spark, nt).collect()
     assert len(dist) == len(local)
@@ -426,6 +437,8 @@ def test_distributed_quads_roundtrip(spark, tmp_path):
     from pyjelly_spark.sources.nt_source import read_nt
 
     nq = "/root/reference/tests/e2e_test_cases/quads_rdf_1_1/weather-quads.nq"
+    if not os.path.exists(nq):
+        pytest.skip(f"{nq} not available")
     stmts = read_nt(spark, nq).repartition(2)
     out = str(tmp_path / "quads_out")
     options = jc.StreamOptions(
@@ -586,10 +599,14 @@ def test_write_nt_roundtrip(spark, tmp_path):
 
     from pyjelly_spark.sources.nt_source import read_nt, write_nt
 
-    for fixture in (
+    fixtures = (
         "/root/reference/tests/e2e_test_cases/triples_rdf_1_1/weather.nt",
         "/root/reference/tests/e2e_test_cases/quads_rdf_1_1/weather-quads.nq",
-    ):
+    )
+    missing = [f for f in fixtures if not os.path.exists(f)]
+    if missing:
+        pytest.skip(f"{', '.join(missing)} not available")
+    for fixture in fixtures:
         stmts = read_nt(spark, fixture)
         out = str(tmp_path / ("nt_out_" + fixture.split("/")[-1]))
         write_nt(stmts, out)

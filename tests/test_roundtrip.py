@@ -58,7 +58,9 @@ def _roundtrip(statements, options):
 
 
 @requires_corpora
-@pytest.mark.parametrize("path", NT_FILES, ids=os.path.basename)
+@pytest.mark.parametrize(
+    "path", NT_FILES, ids=[os.path.basename(p) for p in NT_FILES]
+)
 @pytest.mark.parametrize("preset_name", list(PRESETS))
 @pytest.mark.parametrize("frame_rows", FRAME_SIZES)
 def test_triples_roundtrip(path, preset_name, frame_rows):
@@ -73,7 +75,9 @@ def test_triples_roundtrip(path, preset_name, frame_rows):
 
 
 @requires_corpora
-@pytest.mark.parametrize("path", NQ_FILES, ids=os.path.basename)
+@pytest.mark.parametrize(
+    "path", NQ_FILES, ids=[os.path.basename(p) for p in NQ_FILES]
+)
 @pytest.mark.parametrize("preset_name", ["big", "small"])
 @pytest.mark.parametrize("frame_rows", FRAME_SIZES)
 def test_quads_roundtrip(path, preset_name, frame_rows):
