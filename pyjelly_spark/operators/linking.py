@@ -67,11 +67,17 @@ def link_mentions(
     definitions:  (def_repo, def_path, symbol)
     returns:      (repo, path, symbol, def_repo, def_path, link_score)
     """
-    # The def side deliberately KEEPS per-dictionary groupBy exchanges:
-    # map-side partial aggregation shrinks each shuffle to ~distinct-keys
-    # volume, which beats one full-volume raw repartition per branch (the
-    # four subtrees do not reliably hit exchange reuse). The post-agg
-    # re-exchange to hash(symbol) for join co-partitioning is small.
+    # Every dictionary's grouping keys include ``symbol``, so definitions
+    # that arrive hash-partitioned on ``symbol`` (the pipeline passes them
+    # so) aggregate in place; raw ones get one partial-aggregate exchange
+    # per dictionary. Alone, the two shapes cost the same (10k files, 4
+    # vCPUs: 0.57 s raw vs 0.55 s pre-exchanged into a noop sink, 4 def
+    # exchanges each). Pre-exchanging wins once the def sites have another
+    # symbol-keyed consumer: with the canonical election on the same
+    # exchange, the pipeline's encode plan runs 3 def-side shuffles
+    # instead of 7 (Spark does not reuse all branch subtrees: their
+    # inferred filters differ below the exchange) and 13 jobs instead of
+    # 20, and a fused run is 21% faster (8 of 8 alternating pairs).
     defs = definitions.select(
         "symbol", "def_repo", "def_path", _pkg(F.col("def_path")).alias("def_pkg")
     )

@@ -3,8 +3,9 @@
 Stages (BASELINE.json north_rule):
   1. extract     — mention detection + structural triples (extract.py)
   2. link        — call mentions resolved to def sites (linking.py)
-  3. canonicalize— symbol collision graph -> connected components ->
-                   canonical-entity triples (components.py)
+  3. canonicalize— each symbol defined at several sites elects one
+                   canonical def site in a symbol-keyed aggregation ->
+                   canonical-entity triples
   4. materialize — skew-aware partitioning, deterministic in-partition
                    order, one Jelly stream per partition with manifest
                    lineage (jelly_io.py); checkpoint-resumable.
@@ -13,13 +14,13 @@ One execution shape. Extraction reduces the corpus to the narrow compact
 frame (sha + mention arrays, no content) in one sweep, and that frame is
 the run's only checkpoint. Two actions read it: the partition histogram,
 which needs only the frame's array sizes (``plan_partitions``), and the
-encode job, which runs linking, CC, the triples build and the encode
-once. ``resume`` picks only where the checkpoint lives — executor
-storage for a fused run, parquet under ``out_dir`` for a resumable one
-— and whether completed streams are skipped.
+encode job, which runs linking, the canonical election, the triples
+build and the encode once. ``resume`` picks only where the checkpoint
+lives — executor storage for a fused run, parquet under ``out_dir`` for
+a resumable one — and whether completed streams are skipped.
 
 Scale design:
-- extraction/linking/CC are declarative -> Catalyst handles pushdown,
+- extraction/linking/election are declarative -> Catalyst handles pushdown,
   broadcast choice, AQE skew splitting;
 - materialization partitions by (repo, salt): salt splits mega-repos
   into bounded streams (each salted slice is an independent, valid Jelly
@@ -42,7 +43,6 @@ from pyspark.sql import functions as F
 
 from pyjelly_spark.jelly import constants as jc
 from pyjelly_spark.operators import extract as X
-from pyjelly_spark.operators.components import star_components
 from pyjelly_spark.operators.extract import SYMBOL_BASE
 from pyjelly_spark.operators.linking import (
     def_site_iri,
@@ -63,59 +63,29 @@ class PipelineConfig:
     resume: bool = True
 
 
-def _def_sites(compact: DataFrame) -> DataFrame:
-    return compact.select(
-        F.col("repo").alias("def_repo"),
-        F.col("path").alias("def_path"),
-        F.explode("defs").alias("symbol"),
-    )
-
-
-def collision_edges(compact: DataFrame) -> DataFrame:
-    """The def-collision graph of a compact frame: one
-    ``(def_repo, def_path, src, dst)`` edge per def of a symbol defined at
-    more than one site, from the def-site IRI (``src``) to the symbol hub
-    (``dst``). Connected components over it elect one canonical def site
-    per symbol.
-
-    STAR-FOREST INVARIANT (star_components depends on this construction):
-    src = def_site_iri(...) EMBEDS its symbol, so a def-site node can never
-    attach to two symbol hubs, and src/dst live in disjoint IRI namespaces
-    (def-site vs SYMBOL_BASE), so no node appears on both sides. If you
-    change either column, star_components silently returns wrong
-    components — which is why build_triples calls it with
-    check_invariant=True (a guard that fails the job loudly instead).
-    """
-    defs = _def_sites(compact)
-    multi = defs.groupBy("symbol").agg(F.count(F.lit(1)).alias("n_sites"))
-    colliding = defs.join(
-        F.broadcast(multi.where(F.col("n_sites") > 1).select("symbol")),
-        "symbol",
-    )
-    return colliding.select(
-        "def_repo",
-        "def_path",
-        def_site_iri(F.col("def_repo"), F.col("def_path"), F.col("symbol")).alias(
-            "src"
-        ),
-        F.concat(F.lit(SYMBOL_BASE), F.col("symbol")).alias("dst"),
-    )
-
-
 def build_triples(compact: DataFrame, config: PipelineConfig) -> DataFrame:
     """All pipeline triples in the uniform (repo, path, kind_rank, s, p, o)
     frame, derived from the compact frame (``extract.extract_compact``)
     without touching content.
 
-    Lazy: the link equi-join and the CC aggregation run inside whatever
+    Lazy: the link joins and the canonical election run inside whatever
     action consumes the result — in ``run_pipeline`` that is the encode
-    job, once. ``compact`` feeds the structural triples, the link
-    dictionary, the call mentions and the collision graph, so callers
-    pass it checkpointed (``run_pipeline`` keeps it on executor storage
-    or as parquet); otherwise each consumer re-runs the content sweep.
+    job, once. ``compact`` feeds the structural triples, the def sites
+    and the call mentions, so callers pass it checkpointed
+    (``run_pipeline`` keeps it on executor storage or as parquet);
+    otherwise each consumer re-runs the content sweep.
     Each compact row yields at most :func:`file_triple_bound` triples.
     """
     triples = X.triples_from_compact(compact)
+    # The def sites are exchanged on hash(symbol) once, here: every
+    # def-side grouping below (the link dictionaries, the election) is
+    # keyed by a superset of ``symbol``, so none adds an exchange of its
+    # own (Spark reuses this one across branches whose subtrees match).
+    defs = compact.select(
+        F.col("repo").alias("def_repo"),
+        F.col("path").alias("def_path"),
+        F.explode("defs").alias("symbol"),
+    ).repartition("symbol")
 
     if config.link_calls:
         calls = compact.select(
@@ -125,25 +95,39 @@ def build_triples(compact: DataFrame, config: PipelineConfig) -> DataFrame:
         # (one row per (symbol, repo, pkg)), so it would turn into a
         # driver collect of millions of rows per pass; AQE still
         # auto-broadcasts them while they fit the threshold
-        linked = link_mentions(calls, _def_sites(compact))
+        linked = link_mentions(calls, defs)
         triples = triples.unionByName(resolved_call_triples(linked))
 
     if config.canonicalize:
-        # Symbols defined at multiple sites form equivalence classes: every
-        # def site of symbol S links to the symbol node, and connected
-        # components elect one canonical def site per class. The graph is
-        # a disjoint star forest by construction (see collision_edges), so
-        # CC is one hub-keyed aggregation instead of O(log n) rounds.
-        edges = collision_edges(compact)
-        assignment = star_components(edges, check_invariant=True)
+        # Symbols defined at multiple sites form equivalence classes, each
+        # one star (its def sites around the symbol hub), so each class
+        # elects its canonical site in one symbol-keyed aggregation: the
+        # least of its def-site IRIs and the hub IRI, the connected-
+        # components representative (components.star_components). Sites
+        # with a null repo or path count toward n_sites but have no IRI,
+        # so they emit no triple; a site defined twice keeps both rows.
+        site = def_site_iri(F.col("def_repo"), F.col("def_path"), F.col("symbol"))
+        elected = (
+            defs.groupBy("symbol")
+            .agg(
+                F.count(F.lit(1)).alias("n_sites"),
+                F.least(
+                    F.min(site), F.concat(F.lit(SYMBOL_BASE), F.col("symbol"))
+                ).alias("component"),
+            )
+            .where(F.col("n_sites") > 1)
+        )
+        # Both join sides are already hash-partitioned on symbol, so a
+        # shuffled hash join runs in place; a broadcast would add a job
+        # that collects every colliding symbol to the driver.
         canonical = (
-            edges.withColumnRenamed("src", "node")
-            .join(assignment, "node")
+            defs.join(elected.hint("shuffle_hash"), "symbol")
+            .where(F.col("def_repo").isNotNull() & F.col("def_path").isNotNull())
             .select(
                 F.col("def_repo").alias("repo"),
                 F.col("def_path").alias("path"),
                 F.lit(7).cast("int").alias("kind_rank"),
-                X.iri(F.col("node")).alias("s"),
+                X.iri(site).alias("s"),
                 X.iri(F.lit(X.P_CANONICAL)).alias("p"),
                 X.iri(F.col("component")).alias("o"),
             )
@@ -182,8 +166,8 @@ def plan_partitions(
     repos coalesce. Planning from the bound rather than from the joined
     triples (Scarlett, EuroSys 2011: plan skew from a cheap up-front
     estimate) means the histogram reads only the narrow compact frame —
-    no link join or CC aggregation runs for it, and those run once, in
-    the action that consumes the plan. The bound is at least the true
+    no link join or canonical election runs for it, and those run once,
+    in the action that consumes the plan. The bound is at least the true
     count, so a repo never gets fewer salts than its triples need.
 
     One histogram action, driver-bounded: the aggregate returns the
@@ -283,9 +267,9 @@ def run_pipeline(
 
     One plan for both values of ``config.resume``: extract the compact
     frame, checkpoint it, histogram its triple bound
-    (:func:`plan_partitions`), then run linking, CC, the triples build
-    and the encode in one ``write_jelly`` job. ``resume`` picks the
-    checkpoint store and nothing else in the plan:
+    (:func:`plan_partitions`), then run linking, the election, the
+    triples build and the encode in one ``write_jelly`` job. ``resume``
+    picks the checkpoint store and nothing else in the plan:
 
     - ``resume=False`` (fused, fire-and-forget): the compact frame is a
       ``localCheckpoint`` on executor storage, filled by the histogram

@@ -21043,10 +21043,12 @@ FROM mem GROUP BY rep
 
 def q_kg_canonical_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonicalization through the closed-form star CC (r4,
-    operators/components.py::star_components) — the pipeline's default
-    path: the def-collision graph is a disjoint union of stars by
-    construction (def-site IRIs embed their symbol), so components fall
-    out of ONE hub-keyed aggregation instead of iterative rounds. Same
+    operators/components.py::star_components): the def-collision graph
+    is a disjoint union of stars by construction (def-site IRIs embed
+    their symbol), so components fall out of ONE hub-keyed aggregation
+    instead of iterative rounds. The pipeline goes one step further and
+    elects the same representative per symbol without building the
+    graph (``pipeline.build_triples``). Same
     output contract — and the same oracle — as kg_canonical, which
     gates the general iterative operator on the identical graph; this
     query gates the shortcut."""

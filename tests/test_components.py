@@ -908,20 +908,28 @@ def test_star_components_self_loops_match_iterative(spark):
 
 
 def test_pipeline_structural_cc_matches_iterative(spark, source_files_500):
-    """On the pipeline's own def-collision edges, the closed-form star CC
-    the pipeline runs gives the same assignment as the general iterative
-    operator: the graph is a disjoint star forest by construction."""
+    """The pipeline's per-symbol canonical election gives every def site
+    the component the general iterative operator finds on the
+    def-collision graph: the graph is one star per symbol, so one
+    symbol-keyed aggregation elects each component."""
     from pyjelly_spark.operators import extract as X
-    from pyjelly_spark.operators.components import (
-        connected_components,
-        star_components,
+    from pyjelly_spark.operators.linking import DEF_SITE_BASE
+    from pyjelly_spark.pipeline import PipelineConfig, build_triples
+    from tests.test_pipeline import collision_edges
+
+    compact = X.extract_compact(source_files_500)
+    iterative = {
+        (r["node"], r["component"])
+        for r in connected_components(
+            collision_edges(compact).select("src", "dst")
+        ).collect()
+        if r["node"].startswith(DEF_SITE_BASE)
+    }
+    triples = build_triples(
+        compact, PipelineConfig(out_dir="unused", link_calls=False)
     )
-    from pyjelly_spark.pipeline import collision_edges
-
-    edges = collision_edges(X.extract_compact(source_files_500))
-
-    def assignment(df):
-        return sorted((r["node"], r["component"]) for r in df.collect())
-
-    star = assignment(star_components(edges, check_invariant=True))
-    assert star == assignment(connected_components(edges)) and len(star) > 0
+    elected = {
+        (r["s"]["value"], r["o"]["value"])
+        for r in triples.where(F.col("kind_rank") == 7).collect()
+    }
+    assert elected == iterative and len(elected) > 0

@@ -2,12 +2,19 @@
 materialization, lineage invariant, checkpoint resume."""
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
 from pyjelly_spark.operators import extract as X
-from pyjelly_spark.operators.linking import link_mentions
+from pyjelly_spark.operators.components import star_components
+from pyjelly_spark.operators.linking import (
+    DEF_SITE_BASE,
+    def_site_iri,
+    link_mentions,
+    resolved_call_triples,
+)
 from pyjelly_spark.pipeline import (
     PipelineConfig,
     build_triples,
@@ -261,6 +268,122 @@ class TestCanonicalization:
             F.countDistinct("o.value").alias("n")
         )
         assert grouped.where(F.col("n") != 1).count() == 0
+
+
+def _def_sites(compact):
+    return compact.select(
+        F.col("repo").alias("def_repo"),
+        F.col("path").alias("def_path"),
+        F.explode("defs").alias("symbol"),
+    )
+
+
+def collision_edges(compact):
+    """The def-collision graph of a compact frame: one
+    ``(def_repo, def_path, src, dst)`` edge per def of a symbol defined at
+    more than one site, from the def-site IRI (``src``) to the symbol hub
+    (``dst``). One star per symbol, since each def-site IRI embeds its
+    symbol."""
+    defs = _def_sites(compact)
+    multi = defs.groupBy("symbol").agg(F.count(F.lit(1)).alias("n_sites"))
+    colliding = defs.join(
+        F.broadcast(multi.where(F.col("n_sites") > 1).select("symbol")),
+        "symbol",
+    )
+    return colliding.select(
+        "def_repo",
+        "def_path",
+        def_site_iri(F.col("def_repo"), F.col("def_path"), F.col("symbol")).alias(
+            "src"
+        ),
+        F.concat(F.lit(X.SYMBOL_BASE), F.col("symbol")).alias("dst"),
+    )
+
+
+def collision_graph_triples(compact):
+    """The triples build through the def-collision graph: linking on the
+    unpartitioned def sites, and canonicalization as checked star CC over
+    :func:`collision_edges` joined back to its spokes. The oracle that
+    ``build_triples``' per-symbol election must match as a multiset."""
+    calls = compact.select("repo", "path", F.explode("calls").alias("symbol"))
+    linked = link_mentions(calls, _def_sites(compact))
+    edges = collision_edges(compact)
+    assignment = star_components(edges, check_invariant=True)
+    canonical = (
+        edges.withColumnRenamed("src", "node")
+        .join(assignment, "node")
+        .select(
+            F.col("def_repo").alias("repo"),
+            F.col("def_path").alias("path"),
+            F.lit(7).cast("int").alias("kind_rank"),
+            X.iri(F.col("node")).alias("s"),
+            X.iri(F.lit(X.P_CANONICAL)).alias("p"),
+            X.iri(F.col("component")).alias("o"),
+        )
+    )
+    return (
+        X.triples_from_compact(compact)
+        .unionByName(resolved_call_triples(linked))
+        .unionByName(canonical)
+    )
+
+
+class TestElectionMatchesCollisionGraph:
+    """``build_triples`` elects each symbol's canonical def site in one
+    symbol-keyed aggregation; its triple multiset must equal the
+    collision-graph build's, so the encoded streams stay byte-identical."""
+
+    @staticmethod
+    def _multisets(compact):
+        return tuple(
+            Counter(df.collect())
+            for df in (
+                build_triples(compact, PipelineConfig(out_dir="unused")),
+                collision_graph_triples(compact),
+            )
+        )
+
+    def test_source_files_500(self, spark, source_files_500):
+        compact = X.extract_compact(source_files_500).cache()
+        try:
+            got, want = self._multisets(compact)
+        finally:
+            compact.unpersist()
+        assert got == want
+        kinds = Counter(row["kind_rank"] for row in got.elements())
+        assert kinds[6] > 0 and kinds[7] > 0
+
+    def test_edge_cases(self, spark):
+        """A symbol defined twice in one file, def sites with a null repo
+        and with a null path, a symbol whose other sites are all null, and
+        a row with null mention arrays."""
+        compact = spark.createDataFrame(
+            [
+                ("r1", "src/pkg1/a.py", "py", "s1", ["m"], ["f", "f", "g"], ["f", "h"]),
+                ("r1", "src/pkg2/b.py", "py", "s2", [], ["f", "h", "y"], ["g", "z"]),
+                (None, "src/pkg1/c.py", "py", "s3", [], ["g", "h", "z"], ["f"]),
+                ("r2", None, "py", "s4", [], ["h", "k", "y", "z"], ["k"]),
+                ("r2", "src/pkg1/d.py", "py", "s5", None, None, None),
+                ("r3", "x.py", "py", "s6", [], ["k"], ["y"]),
+            ],
+            "repo string, path string, lang string, sha string, "
+            "imports array<string>, defs array<string>, calls array<string>",
+        )
+        got, want = self._multisets(compact)
+        assert got == want
+        canonical = Counter(
+            (row["s"]["value"], row["o"]["value"])
+            for row in got.elements()
+            if row["kind_rank"] == 7
+        )
+        f_site = DEF_SITE_BASE + "r1/src/pkg1/a.py#f"
+        # the double def keeps both triples, and f elects its least site
+        assert canonical[(f_site, f_site)] == 2
+        # y's other site has a null path: it counts toward the collision,
+        # so the one IRI site elects itself; z's sites are all null
+        y_site = DEF_SITE_BASE + "r1/src/pkg2/b.py#y"
+        assert canonical[(y_site, y_site)] == 1
+        assert not [s for s, _ in canonical if s is None or s.endswith("#z")]
 
 
 class TestSourceReaderAndStageGuard:
